@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Tracks DataFrames persisted inside operators so harnesses (Verify,
   * Bench, tests) can release them after the consuming action finishes.
@@ -68,12 +69,12 @@ object CacheRegistry {
   def unpersistAll(blocking: Boolean = false): Unit = synchronized {
     live.foreach { case (_, df) =>
       try df.unpersist(blocking)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     live.clear()
     liveRdds.foreach { r =>
       try r.unpersist(blocking)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     liveRdds.clear()
   }
@@ -103,7 +104,7 @@ object CacheRegistry {
         seen += 1
         if (seen <= m) true
         else {
-          try df.unpersist(blocking) catch { case _: Throwable => () }
+          try df.unpersist(blocking) catch { case NonFatal(_) => () }
           false
         }
       }

@@ -1,9 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
+import scala.util.control.NonFatal
+import graft.functions.VectorFns
+import graft.operators.{AnalyticsOps, DedupOps, SimilarityOps, TextOps}
 import graft.sources.Schemas.Event
 
 /** Structured Streaming twins of the batch marts — the reference's
@@ -104,70 +109,18 @@ object StreamOps {
     * FOLDED into the already-clustered corpus
     * ([[graft.operators.DedupOps.dedupIncremental]] — batch-probe
     * pair-gen, prior components collapsed, full transitive-merge
-    * semantics), never re-clustered from scratch. The D6 pattern:
-    * foreachBatch + idempotent storage = effectively-once per doc_id.
-    *
-    * Carried state lives on storage, not in the state store — the
-    * corpus and its labels ARE the pipeline's output tables:
-    *  - `corpusDir/batch=<id>/` — each micro-batch's documents,
-    *    written mode=overwrite into its OWN batch subdir, so a
-    *    replayed batch overwrites itself (idempotent);
-    *  - `labelsDir` — the full label table (doc_id, component,
-    *    n_members, is_canonical), overwritten per batch; the next
-    *    batch reads it back as `priorLabels`.
-    * A replayed batch recomputes from `batch < id` corpus dirs plus
-    * the prior labels and converges to the identical table (the fold
-    * is deterministic and absorbing batch docs already present in the
-    * prior labels is a no-op collapse), so a crash between the two
-    * writes self-heals on restart — the reference's month-skip
-    * idempotent backfill (flows/download_era5_land.py:81), carried
-    * through the full clustering transform.
+    * semantics), never re-clustered from scratch. State is
+    * [[labelFold]]'s: per-batch corpus dirs plus the (doc_id,
+    * component, n_members, is_canonical) label table.
     *
     * The spec drains a MemoryStream corpus in three batches and
     * asserts the final labels equal the batch re-cluster bit-for-bit.
     */
   def streamingDedupIncremental(docs: DataFrame, corpusDir: String,
-      labelsDir: String, minJaccard: Double = 0.7)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val cols = Seq("doc_id", "source", "text").map(col)
-        // snapshot: a foreachBatch frame is only valid inside this
-        // call, and the labels written below must not reference the
-        // labelsDir files they are about to replace
-        val b = batch.select(cols: _*).localCheckpoint(true)
-        def release(df: DataFrame): Unit =
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        try {
-          val labels =
-            if (!new java.io.File(labelsDir).exists())
-              // first batch ever: the fold degenerates to a full
-              // cluster of the batch itself
-              graft.operators.DedupOps.dedupGroups(b, minJaccard)
-            else {
-              val prior = spark.read.parquet(labelsDir).localCheckpoint(true)
-              val corpus =
-                if (new java.io.File(corpusDir).exists())
-                  spark.read.parquet(corpusDir)
-                    .filter(col("batch") < lit(id)).select(cols: _*)
-                else b.filter(lit(false)) // crash-window replay: no corpus yet
-              val out = graft.operators.DedupOps
-                .dedupIncremental(corpus, prior, b, minJaccard)
-                .localCheckpoint(true)
-              release(prior)
-              out
-            }
-          labels.write.mode("overwrite").parquet(labelsDir)
-          release(labels)
-          b.write.mode("overwrite").parquet(s"$corpusDir/batch=$id")
-        } finally {
-          release(b)
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      labelsDir: String, minJaccard: Double = 0.7): DataStreamWriter[Row] =
+    labelFold(docs, Seq("doc_id", "source", "text"), corpusDir, labelsDir)(
+      DedupOps.dedupGroups(_, minJaccard),
+      DedupOps.dedupIncremental(_, _, _, minJaccard))
 
   /** Registry gate for D11 (r14, VERDICT r13 #5): the streaming
     * incremental-dedup fold driven END-TO-END from the scale-factor
@@ -212,7 +165,7 @@ object StreamOps {
       org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
         spark.read.parquet(s"$base/labels")
           .select("doc_id", "component", "n_members", "is_canonical")))
-    deleteRecursively(base)
+    deleteRecursively(spark, base)
     out
   }
 
@@ -264,7 +217,7 @@ object StreamOps {
     // temp workspace (input split + stream checkpoint) is dead once the
     // drain finishes — delete it NOW (r15, VERDICT r14 #4: repeated
     // bench/Verify passes leaked a corpus copy per invocation)
-    deleteRecursively(base)
+    deleteRecursively(spark, base)
     hourlyFinish(spark.table("graft_stream_hourly_gate"))
   }
 
@@ -298,59 +251,68 @@ object StreamOps {
     * checkpoint (+ corpus/labels for the dedup fold) — without
     * deletion, disk grows by a corpus copy per bench/Verify pass.
     */
-  private def deleteRecursively(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p =>
-          try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-    }
-  }
+  private def deleteRecursively(spark: SparkSession, dir: String): Unit =
+    try hadoopFs(spark, dir).delete(new Path(dir), true)
+    catch { case _: java.io.IOException => () }
 
   /** D23 (r11, VERDICT r10 #7): streaming SEMANTIC-dedup fold — the
-    * embedding-space twin of D11, closing the gap that the semantic
-    * family had no ingest path: each arriving micro-batch of vectors
+    * embedding-space twin of D11: each arriving micro-batch of vectors
     * folds into the stored semantic components via
     * [[graft.operators.SimilarityOps.dedupSemanticIncremental]] (the
     * SAME collapsed-closure kernel as the lexical fold — batch-probe
     * cosine pairs, prior components collapsed, min-label closure,
-    * fan-out). Storage contract, idempotence, and crash-replay
-    * self-healing are D11's verbatim: per-batch corpus dirs
-    * (overwrite-own-subdir), labels table overwritten per batch and
-    * read back as the prior. The spec drains a MemoryStream corpus in
-    * three batches and asserts the final labels equal the one-shot
-    * [[graft.operators.SimilarityOps.dedupSemantic]] bit-for-bit.
+    * fan-out). State is [[labelFold]]'s, as for D11. The spec drains a
+    * MemoryStream corpus in three batches and asserts the final labels
+    * equal the one-shot [[graft.operators.SimilarityOps.dedupSemantic]]
+    * bit-for-bit.
     */
   def streamingDedupSemantic(vecs: DataFrame, corpusDir: String,
-      labelsDir: String, minCosine: Double = 0.4)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
+      labelsDir: String, minCosine: Double = 0.4): DataStreamWriter[Row] =
+    labelFold(vecs, Seq("vec_id", "embedding"), corpusDir, labelsDir)(
+      SimilarityOps.dedupSemantic(_, minCosine),
+      SimilarityOps.dedupSemanticIncremental(_, _, _, minCosine))
+
+  /** The label fold behind D11 and D23. Carried state lives on storage,
+    * not in the state store — the corpus and its labels ARE the
+    * pipeline's output tables:
+    *  - `corpusDir/batch=<id>/` — each micro-batch's `cols`, written
+    *    mode=overwrite into its OWN batch subdir, so a replayed batch
+    *    overwrites itself;
+    *  - `labelsDir` — the full label table, overwritten per batch; the
+    *    next batch reads it back as the prior labels.
+    * The first batch ever is clustered whole by `first`; every later
+    * one by `incremental(corpus before id, prior labels, batch)`. A
+    * replayed batch recomputes from the `batch < id` corpus dirs plus
+    * the prior labels and converges to the identical table (absorbing
+    * batch rows already in the prior labels is a no-op collapse), so a
+    * crash between the two writes self-heals on restart — the
+    * reference's month-skip idempotent backfill
+    * (flows/download_era5_land.py:81), carried through the clustering
+    * transform. Paths may be any Hadoop path, as for [[snapshotFold]].
+    */
+  private def labelFold(input: DataFrame, cols: Seq[String], corpusDir: String,
+      labelsDir: String)(first: DataFrame => DataFrame,
+      incremental: (DataFrame, DataFrame, DataFrame) => DataFrame)
+      : DataStreamWriter[Row] =
+    input.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
-        val cols = Seq("vec_id", "embedding").map(col)
-        val b = batch.select(cols: _*).localCheckpoint(true)
-        def release(df: DataFrame): Unit =
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        // snapshot: a foreachBatch frame is only valid inside this
+        // call, and the labels written below must not reference the
+        // labelsDir files they are about to replace
+        val b = batch.select(cols.map(col): _*).localCheckpoint(true)
         try {
           val labels =
-            if (!new java.io.File(labelsDir).exists())
-              // first batch ever: the fold degenerates to a one-shot
-              // semantic cluster of the batch itself
-              graft.operators.SimilarityOps.dedupSemantic(b, minCosine)
+            if (!pathExists(spark, labelsDir)) first(b)
             else {
               val prior = spark.read.parquet(labelsDir).localCheckpoint(true)
               val corpus =
-                if (new java.io.File(corpusDir).exists())
+                if (pathExists(spark, corpusDir))
                   spark.read.parquet(corpusDir)
-                    .filter(col("batch") < lit(id)).select(cols: _*)
+                    .filter(col("batch") < lit(id)).select(cols.map(col): _*)
                 else b.filter(lit(false)) // crash-window replay: no corpus yet
-              val out = graft.operators.SimilarityOps
-                .dedupSemanticIncremental(corpus, prior, b, minCosine)
-                .localCheckpoint(true)
+              val out = incremental(corpus, prior, b).localCheckpoint(true)
               release(prior)
               out
             }
@@ -359,799 +321,366 @@ object StreamOps {
           b.write.mode("overwrite").parquet(s"$corpusDir/batch=$id")
         } finally {
           release(b)
+          // ROADMAP open item 1: the dedup kernels register pins this fold has no handle to
           graft.CacheRegistry.unpersistAll()
         }
       }
 
-  /** D12: streaming CUSUM monitor — the online half of B41: the
-    * change-in-mean fold applied at ingest, carrying per-key state on
-    * storage (the D11 contract). `stats` is the batch-built co-moment
-    * table ([[graft.operators.AnalyticsOps.zscoreStats]] — the same
-    * offline-model/online-score split as D7). Because the fold runs
-    * in B41's n-scaled INTEGER domain (cusumDevExpr: exact
-    * DECIMAL(38,0) addends), folding micro-batches is exactly
-    * associative — any batch split of the stream lands on state
-    * bit-identical to the batch detector over the union (spec-pinned)
-    * — provided batches arrive in (ts, event_id) order per key, the
-    * ordered-backfill contract D11's fold also assumes. A double-
-    * domain fold could not make this promise (B41's measured 3–9 ulp
-    * engine/batch-split drift).
+  /** The snapshot fold every streaming monitor below is built on. Per
+    * micro-batch `id` it pins the batch's `cols`, reads and pins the
+    * prior state, writes `merge(batch, prior)` as the full state
+    * snapshot `stateDir/batch=<id>`, prunes old snapshots and releases
+    * its two pins. A monitor is only its `merge`.
     *
-    * State snapshots are written to `stateDir/batch=<id>` and the
-    * fold reads back the LATEST snapshot with `batch < id` — a
-    * replayed micro-batch recomputes from the prior snapshot and
-    * overwrites only its own dir, so crash-replay is idempotent
-    * (D11's self-healing shape).
+    * Storage contract:
+    *  - the prior is the LATEST snapshot with batch < id (None before
+    *    the first), so a micro-batch replayed after a crash recomputes
+    *    from the same prior and overwrites only its own dir — replay is
+    *    idempotent, the reference's month-skip backfill
+    *    (flows/download_era5_land.py:81) carried into monitor state;
+    *  - after the write, every snapshot with batch ≤ id − retainBatches
+    *    is deleted. Snapshots are full states, not deltas, so older
+    *    dirs carry nothing the newest does not. `retainBatches` ≥ 2 is
+    *    enforced: Structured Streaming replays at most the last
+    *    uncommitted batch, whose prior is snapshot id − 1;
+    *  - only the batch and prior pins are released; caches other
+    *    operators hold in the session are left alone;
+    *  - `stateDir` may be any Hadoop path (local, `file:`, HDFS, an
+    *    object store): exists, list and delete go through its own
+    *    FileSystem.
+    */
+  private def snapshotFold(input: DataFrame, cols: Seq[String],
+      stateDir: String, retainBatches: Int)(
+      merge: (DataFrame, Option[DataFrame]) => DataFrame): DataStreamWriter[Row] =
+    input.writeStream
+      .outputMode(OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        require(retainBatches >= 2,
+          s"snapshotFold: retainBatches must be >= 2 to preserve the " +
+            s"latest-prior crash-replay read (got $retainBatches)")
+        val spark = batch.sparkSession
+        val b = batch.select(cols.map(col): _*).localCheckpoint(true)
+        try {
+          val prior = latestSnapshot(spark, stateDir, before = id)
+            .map(_.localCheckpoint(true))
+          try {
+            merge(b, prior).write.mode("overwrite").parquet(s"$stateDir/batch=$id")
+            val fs = hadoopFs(spark, stateDir)
+            fs.listStatus(new Path(stateDir)).map(_.getPath).filter { p =>
+              p.getName.startsWith("batch=") && p.getName.stripPrefix("batch=")
+                .toLongOption.exists(_ <= id - retainBatches)
+            }.foreach(p => try fs.delete(p, true) catch { case NonFatal(_) => () })
+          } finally prior.foreach(release)
+        } finally release(b)
+      }
+
+  /** The newest `batch=<id>` snapshot under `dir` with id < `before`,
+    * without its batch column; None when there is none.
+    */
+  private def latestSnapshot(spark: SparkSession, dir: String,
+      before: Long = Long.MaxValue): Option[DataFrame] =
+    if (!pathExists(spark, dir)) None
+    else {
+      val all = spark.read.parquet(dir).filter(col("batch") < lit(before))
+      Option(all.agg(max("batch")).head().get(0))
+        .map(newest => all.filter(col("batch") === lit(newest)).drop("batch"))
+    }
+
+  /** The live state of a monitor: its newest snapshot. */
+  private def latest(spark: SparkSession, stateDir: String): DataFrame =
+    latestSnapshot(spark, stateDir).getOrElse(throw new IllegalStateException(
+      s"no batch=<id> state snapshot under $stateDir"))
+
+  /** The count-grid merge: full-outer join `fresh` to the prior on
+    * `keys` and add every other column, a key missing on one side
+    * adding that column's zero cast to the column's own type (so long
+    * and DECIMAL(38,0) state keeps its type). Exact integer addition is
+    * associative and commutative, so the folded state equals the
+    * whole-history batch state bit-for-bit on any batch split.
+    */
+  private def addInto(prior: Option[DataFrame], fresh: DataFrame,
+      keys: String*): DataFrame = prior.fold(fresh) { p =>
+    val vals = fresh.columns.toSeq.filterNot(keys.contains)
+    p.select(keys.map(col) ++ vals.map(c => col(c).as(s"${c}_0")): _*)
+      .join(fresh, keys, "full_outer")
+      .select(keys.map(col) ++ vals.map { c =>
+        val zero = lit(0).cast(fresh.schema(c).dataType)
+        (coalesce(col(s"${c}_0"), zero) + coalesce(col(c), zero)).as(c)
+      }: _*)
+  }
+
+  /** Drop a localCheckpoint pin now instead of whenever GC notices it. */
+  private def release(df: DataFrame): Unit =
+    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
+      .foreach(r => try r.unpersist(false) catch { case NonFatal(_) => () })
+
+  private def hadoopFs(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def pathExists(spark: SparkSession, dir: String): Boolean =
+    hadoopFs(spark, dir).exists(new Path(dir))
+
+  /** D12: streaming CUSUM monitor — the online half of B41. `stats` is
+    * the batch-built co-moment table
+    * ([[graft.operators.AnalyticsOps.zscoreStats]] — the D7
+    * offline-model/online-score split). State per key: the running
+    * n-scaled deviation sum `cum_s`, the largest-|s| point (best_mag,
+    * best_ts, best_s, best_id) and `n_seen`. Merge: the batch's running
+    * sums start from the prior `cum_s`, and the prior's best point
+    * competes with the batch's. The fold runs in B41's exact
+    * DECIMAL(38,0) domain (cusumDevExpr), so any batch split lands on
+    * state bit-identical to the batch detector over the union —
+    * provided batches arrive in (ts, event_id) order per key, the
+    * ordered-backfill contract D11's fold also assumes.
     */
   def streamingCusum(events: DataFrame, stats: DataFrame, stateDir: String,
-      retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.types.DecimalType
-        val spark = batch.sparkSession
-        val I = DecimalType(38, 0)
-        val b = batch.select(col("event_id"), col("event_type"), col("ts"),
-          col("value")).localCheckpoint(true)
-        try {
-          val w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val scoredB = b.join(broadcast(stats), "event_type")
-            .withColumn("dev_s",
-              graft.operators.AnalyticsOps.cusumDevExpr(col("value")))
-            .withColumn("s_local", sum(col("dev_s")).over(w))
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val cum0 = prior.map(_.select(col("event_type"),
-            col("cum_s").as("cum0")))
-          val withCum = cum0 match {
-            case Some(c) => scoredB.join(broadcast(c), Seq("event_type"), "left")
-              .withColumn("s_scaled",
-                coalesce(col("cum0"), lit(0).cast(I)) + col("s_local"))
-            case None => scoredB.withColumn("s_scaled", col("s_local"))
-          }
-          val bAgg = withCum.groupBy("event_type").agg(
-            max(struct(abs(col("s_scaled")).as("mag_s"), col("ts"),
-              col("s_scaled"), col("event_id"))).as("mb"),
-            sum("dev_s").as("dsum"), count(lit(1)).as("cnt"))
-          val fresh = bAgg.select(col("event_type"),
-            col("dsum").cast(I).as("cum_s"),
-            col("mb.mag_s").as("best_mag"), col("mb.ts").as("best_ts"),
-            col("mb.s_scaled").as("best_s"),
-            col("mb.event_id").as("best_id"), col("cnt").as("n_seen"))
-          val newState = prior match {
-            case None => fresh
-            case Some(p) =>
-              // full outer: keys untouched this batch carry through
-              val pb = when(col("best_ts").isNotNull,
-                struct(col("best_mag").as("mag_s"), col("best_ts").as("ts"),
-                  col("best_s").as("s_scaled"), col("best_id").as("event_id")))
-              p.join(bAgg, Seq("event_type"), "full_outer")
-                .select(col("event_type"),
-                  (coalesce(col("cum_s"), lit(0).cast(I))
-                    + coalesce(col("dsum").cast(I), lit(0).cast(I))).as("cum_s"),
-                  greatest(pb, col("mb")).getField("mag_s").as("best_mag"),
-                  greatest(pb, col("mb")).getField("ts").as("best_ts"),
-                  greatest(pb, col("mb")).getField("s_scaled").as("best_s"),
-                  greatest(pb, col("mb")).getField("event_id").as("best_id"),
-                  (coalesce(col("n_seen"), lit(0L))
-                    + coalesce(col("cnt"), lit(0L))).as("n_seen"))
-          }
-          newState.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
+      retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_id", "event_type", "ts", "value"),
+        stateDir, retainBatches) { (b, prior) =>
+      val I = DecimalType(38, 0)
+      val w = Window.partitionBy("event_type").orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val scoredB = b.join(broadcast(stats), "event_type")
+        .withColumn("dev_s", AnalyticsOps.cusumDevExpr(col("value")))
+        .withColumn("s_local", sum(col("dev_s")).over(w))
+      val withCum = prior match {
+        case Some(p) => scoredB
+          .join(broadcast(p.select(col("event_type"), col("cum_s").as("cum0"))),
+            Seq("event_type"), "left")
+          .withColumn("s_scaled",
+            coalesce(col("cum0"), lit(0).cast(I)) + col("s_local"))
+        case None => scoredB.withColumn("s_scaled", col("s_local"))
       }
-
-  /** Snapshot retention sweep (VERDICT r8 #9): the D12–D16 monitors
-    * write one `batch=<id>` directory per micro-batch and previously
-    * kept them all FOREVER — harmless in a 3-batch spec, unbounded in
-    * a long-lived stream. After committing batch `id`, delete every
-    * snapshot with batch ≤ id − `retain`. `retain` ≥ 2 preserves the
-    * idempotent crash-replay contract: Structured Streaming replays
-    * at most the last uncommitted batch, whose fold reads the latest
-    * snapshot < id — i.e. id − 1, always retained. (Snapshots are
-    * LATEST-wins full states, not deltas, so older dirs carry no
-    * information the newest doesn't.)
-    */
-  private def pruneSnapshots(stateDir: String, id: Long,
-      retain: Int): Unit = {
-    // ADVICE r9: the retain ≥ 2 contract was documented, not enforced
-    // — retain = 1 deletes the batch id−1 snapshot a replayed batch id
-    // needs, retain = 0 deletes batch = id right after writing it
-    // (silently zeroing monitor state). Fail fast instead.
-    require(retain >= 2,
-      s"pruneSnapshots: retainBatches must be >= 2 to preserve the " +
-        s"latest-prior crash-replay read (got $retain)")
-    val root = new java.io.File(stateDir)
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
-    dirs.filter(_.getName.startsWith("batch=")).foreach { d =>
-      val bid = try d.getName.stripPrefix("batch=").toLong
-        catch { case _: NumberFormatException => Long.MaxValue }
-      if (bid <= id - retain) {
-        import java.nio.file.{Files, Path}
-        try Files.walk(d.toPath)
-          .sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        catch { case _: Throwable => () }
+      val bAgg = withCum.groupBy("event_type").agg(
+        max(struct(abs(col("s_scaled")).as("mag_s"), col("ts"),
+          col("s_scaled"), col("event_id"))).as("mb"),
+        sum("dev_s").as("dsum"), count(lit(1)).as("cnt"))
+      prior match {
+        case None => bAgg.select(col("event_type"),
+          col("dsum").cast(I).as("cum_s"),
+          col("mb.mag_s").as("best_mag"), col("mb.ts").as("best_ts"),
+          col("mb.s_scaled").as("best_s"),
+          col("mb.event_id").as("best_id"), col("cnt").as("n_seen"))
+        case Some(p) =>
+          // full outer: keys untouched this batch carry through
+          val pb = when(col("best_ts").isNotNull,
+            struct(col("best_mag").as("mag_s"), col("best_ts").as("ts"),
+              col("best_s").as("s_scaled"), col("best_id").as("event_id")))
+          p.join(bAgg, Seq("event_type"), "full_outer")
+            .select(col("event_type"),
+              (coalesce(col("cum_s"), lit(0).cast(I))
+                + coalesce(col("dsum").cast(I), lit(0).cast(I))).as("cum_s"),
+              greatest(pb, col("mb")).getField("mag_s").as("best_mag"),
+              greatest(pb, col("mb")).getField("ts").as("best_ts"),
+              greatest(pb, col("mb")).getField("s_scaled").as("best_s"),
+              greatest(pb, col("mb")).getField("event_id").as("best_id"),
+              (coalesce(col("n_seen"), lit(0L))
+                + coalesce(col("cnt"), lit(0L))).as("n_seen"))
       }
     }
-  }
 
-  /** The latest carried D12 state snapshot (raw n-scaled integers;
-    * unscale with [[graft.operators.AnalyticsOps.cusumUnscale]]).
+  /** The latest carried D12 state (raw n-scaled integers; unscale with
+    * [[graft.operators.AnalyticsOps.cusumUnscale]]).
     */
-  def latestCusumState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    all.filter(col("batch") === latest).drop("batch")
-  }
+  def latestCusumState(spark: SparkSession, stateDir: String): DataFrame =
+    latest(spark, stateDir)
 
-  /** D13: streaming heavy hitters — B47's SpaceSaving sketch as a
-    * LIVE monitor. Per micro-batch: sketch the batch (bounded
-    * `capacity` counters per key), union the PRIOR state's counters,
-    * and fold both through the weighted SpaceSaving merge — possible
-    * precisely because the summary is MERGEABLE (est/err bracket
-    * survives any merge order), which exact per-item counting at
-    * 100 TB item cardinality is not (its state grows with distinct
-    * items; this state is fixed at capacity rows per key forever).
-    *
-    * State snapshots under `stateDir/batch=<id>` with latest-prior
-    * reads — D11/D12's idempotent crash-replay shape. The bracket the
-    * batch operator proves per run (est ≥ true ≥ est − err, dominant
-    * items resident) carries to the folded state; the spec checks it
-    * against exact whole-history counts after a multi-batch drain.
+  /** D13: streaming heavy hitters — B47's SpaceSaving sketch as a LIVE
+    * monitor. State: ≤ `capacity` (event_type, item, est, err) counters
+    * per key, fixed forever however many distinct items arrive. Merge:
+    * sketch the batch, union the prior counters, and fold both through
+    * the weighted SpaceSaving merge — the summary is MERGEABLE (the
+    * est ≥ true ≥ est − err bracket survives any merge order), so the
+    * bracket the batch operator proves carries to the folded state.
     */
   def streamingHeavyHitters(events: DataFrame, stateDir: String,
-      capacity: Int = 64, retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("user_id"))
-          .localCheckpoint(true)
-        try {
-          val batchCounters = b
-            .groupBy("event_type")
-            .agg(graft.functions.VectorFns
-              .space_saving(col("user_id").cast("string"), capacity).as("hh"))
-            .select(col("event_type"), explode(col("hh")).as("e"))
-            .select(col("event_type"), col("e.item").as("item"),
-              col("e.est").as("est"), col("e.err").as("err"))
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => batchCounters
-            case Some(p) => p.unionByName(batchCounters)
-              .groupBy("event_type")
-              .agg(graft.functions.VectorFns.space_saving_merge(
-                col("item"), col("est"), col("err"), capacity).as("hh"))
-              .select(col("event_type"), explode(col("hh")).as("e"))
-              .select(col("event_type"), col("e.item").as("item"),
-                col("e.est").as("est"), col("e.err").as("err"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      capacity: Int = 64, retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "user_id"), stateDir,
+        retainBatches) { (b, prior) =>
+      def counters(sketch: DataFrame) = sketch
+        .select(col("event_type"), explode(col("hh")).as("e"))
+        .select(col("event_type"), col("e.item").as("item"),
+          col("e.est").as("est"), col("e.err").as("err"))
+      val batchCounters = counters(b.groupBy("event_type")
+        .agg(VectorFns.space_saving(col("user_id").cast("string"), capacity)
+          .as("hh")))
+      prior.fold(batchCounters)(p => counters(p.unionByName(batchCounters)
+        .groupBy("event_type")
+        .agg(VectorFns.space_saving_merge(
+          col("item"), col("est"), col("err"), capacity).as("hh"))))
+    }
 
   /** The latest folded D13 sketch state. */
-  def latestHeavyHittersState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    all.filter(col("batch") === latest).drop("batch")
-  }
+  def latestHeavyHittersState(spark: SparkSession, stateDir: String): DataFrame =
+    latest(spark, stateDir)
 
-  /** D14: streaming χ² drift monitor — B51 as a LIVE gate. The state
-    * is B51's observed-count grid (key, cohort, o): per micro-batch
-    * one partial-agg groupBy produces the batch's cells, a full-outer
-    * join ADDS them to the prior snapshot — exact integer addition is
-    * associative and commutative, so the folded grid equals the
-    * whole-history batch grid bit-for-bit on ANY batch split (the D12
-    * argument, without even needing a quantization step), and
-    * [[graft.operators.AnalyticsOps.chiSquareFromObs]] applied to the
-    * state is IDENTICAL math to the batch operator — one statistic,
-    * two feeds. State is ≤ R·C rows per snapshot forever (cohorts are
-    * a fixed mod; keys are the monitored dimension), written under
-    * `stateDir/batch=<id>` with latest-prior reads — D11/D12/D13's
-    * idempotent crash-replay shape.
+  /** D14: streaming χ² drift monitor — B51 as a LIVE gate. State:
+    * B51's (event_type, cohort, o) observed-count grid, ≤ R·C rows
+    * (cohorts are a fixed mod). Merge: [[addInto]] the batch's cells,
+    * so [[graft.operators.AnalyticsOps.chiSquareFromObs]] over the
+    * folded grid IS the whole-history batch statistic — one statistic,
+    * two feeds.
     */
   def streamingChiSquare(events: DataFrame, stateDir: String,
-      nCohorts: Int = 4, retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("user_id"))
-          .localCheckpoint(true)
-        try {
-          val bObs = graft.operators.AnalyticsOps.chiSquareObs(b, nCohorts)
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bObs
-            case Some(p) => p
-              .select(col("event_type"), col("cohort"), col("o").as("o0"))
-              .join(bObs, Seq("event_type", "cohort"), "full_outer")
-              .select(col("event_type"), col("cohort"),
-                (coalesce(col("o0"), lit(0L)) + coalesce(col("o"), lit(0L)))
-                  .as("o"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      nCohorts: Int = 4, retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "user_id"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, AnalyticsOps.chiSquareObs(b, nCohorts),
+        "event_type", "cohort")
+    }
 
-  /** The live D14 statistic: B51's exact math over the latest folded
-    * count grid.
-    */
-  def latestChiSquare(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.chiSquareFromObs(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D14 statistic: B51's exact math over the latest grid. */
+  def latestChiSquare(spark: SparkSession, stateDir: String): DataFrame =
+    AnalyticsOps.chiSquareFromObs(latest(spark, stateDir))
 
   /** D15: streaming corpus-drift monitor — C69 as a LIVE gate over a
-    * document feed (the question it answers online: "has the source
-    * mix's token distribution moved since the snapshot the mixture
-    * weights were tuned on?"). The state is C69's (source, tok, c_st)
-    * count table: per micro-batch one tokenize + partial-agg groupBy,
-    * a full-outer ADD into the prior snapshot (exact integer addition
-    * — the D14 associativity argument verbatim), and
-    * [[graft.operators.TextOps.corpusDivergenceFromCounts]] applied
-    * to the folded state IS the batch statistic on the whole history,
-    * bit-for-bit. State is |sources × vocab| rows — the corpus
-    * datasheet's own scale, not the corpus's; snapshots under
-    * `stateDir/batch=<id>` with latest-prior reads (the D11-D14
-    * idempotent crash-replay shape).
+    * document feed ("has the source mix's token distribution moved
+    * since the mixture weights were tuned?"). State: C69's
+    * (source, tok, c_st) count table, |sources × vocab| rows — the
+    * datasheet's scale, not the corpus's. Merge: [[addInto]] the
+    * batch's token counts, so
+    * [[graft.operators.TextOps.corpusDivergenceFromCounts]] over the
+    * folded table IS the whole-history batch statistic.
     */
   def streamingCorpusDivergence(documents: DataFrame, stateDir: String,
-      retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    documents.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("source"), col("text"))
-          .localCheckpoint(true)
-        try {
-          val bObs = b.select(col("source"),
-              explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-            .groupBy("source", "tok").agg(count(lit(1)).as("c_st"))
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bObs
-            case Some(p) => p
-              .select(col("source"), col("tok"), col("c_st").as("c0"))
-              .join(bObs, Seq("source", "tok"), "full_outer")
-              .select(col("source"), col("tok"),
-                (coalesce(col("c0"), lit(0L))
-                  + coalesce(col("c_st"), lit(0L))).as("c_st"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(documents, Seq("source", "text"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, b.select(col("source"),
+          explode(TextOps.tokens(col("text"))).as("tok"))
+        .groupBy("source", "tok").agg(count(lit(1)).as("c_st")),
+        "source", "tok")
+    }
 
-  /** The live D15 statistic: C69's exact math over the latest folded
-    * count table.
-    */
-  def latestCorpusDivergence(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.TextOps.corpusDivergenceFromCounts(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D15 statistic: C69's exact math over the latest counts. */
+  def latestCorpusDivergence(spark: SparkSession, stateDir: String): DataFrame =
+    TextOps.corpusDivergenceFromCounts(latest(spark, stateDir))
 
   /** D16: streaming Welch mean-drift monitor — B48 as a LIVE gate.
-    * The state is B48's (event_type, parity, n, Σx, Σx²) co-moment
-    * grid: per micro-batch one partial-agg groupBy, a full-outer ADD
-    * into the prior snapshot — the D14 associativity argument
-    * verbatim (exact DECIMAL(38,0) integer addition, lossless on any
-    * batch split), so the folded grid equals the whole-history batch
-    * grid bit-for-bit, and [[graft.operators.AnalyticsOps
-    * .welchFromComoments]] applied to it IS the batch statistic (one
-    * math object, two feeds — D14's design). State is ≤ 2·|keys| rows
-    * per snapshot forever, under `stateDir/batch=<id>` with
-    * latest-prior reads and the retention sweep (D11-D15's idempotent
-    * crash-replay shape).
+    * State: B48's (event_type, p, n, s1, s2) co-moment grid in exact
+    * DECIMAL(38,0), ≤ 2·|keys| rows. Merge: [[addInto]] the batch's
+    * co-moments, so [[graft.operators.AnalyticsOps.welchFromComoments]]
+    * over the folded grid IS the whole-history batch statistic.
     */
   def streamingWelch(events: DataFrame, stateDir: String,
-      retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("ts"), col("value"))
-          .localCheckpoint(true)
-        try {
-          val bG = graft.operators.AnalyticsOps.welchComoments(b)
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bG
-            case Some(p) => p
-              .select(col("event_type"), col("p"), col("n").as("n0"),
-                col("s1").as("s1_0"), col("s2").as("s2_0"))
-              .join(bG, Seq("event_type", "p"), "full_outer")
-              .select(col("event_type"), col("p"),
-                (coalesce(col("n0"), lit(0L))
-                  + coalesce(col("n"), lit(0L))).as("n"),
-                (coalesce(col("s1_0"), lit(0).cast(DecimalType(38, 0)))
-                  + coalesce(col("s1"), lit(0).cast(DecimalType(38, 0))))
-                  .as("s1"),
-                (coalesce(col("s2_0"), lit(0).cast(DecimalType(38, 0)))
-                  + coalesce(col("s2"), lit(0).cast(DecimalType(38, 0))))
-                  .as("s2"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "ts", "value"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, AnalyticsOps.welchComoments(b), "event_type", "p")
+    }
 
-  /** The live D16 statistic: B48's exact math over the latest folded
-    * co-moment grid.
-    */
-  def latestWelch(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.welchFromComoments(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D16 statistic: B48's exact math over the latest grid. */
+  def latestWelch(spark: SparkSession, stateDir: String): DataFrame =
+    AnalyticsOps.welchFromComoments(latest(spark, stateDir))
 
   /** D19: streaming Brown–Forsythe variance-drift monitor — B55 as a
-    * LIVE gate, completing the streaming drift family's VARIANCE axis
-    * (D16 watches the mean, D17 the omnibus ranks, D18 the CDF shape;
-    * a sensor that starts JITTERING drifts in none of those first).
-    * The offline-model/online-score split is D7/D12's: deviations are
-    * taken from the FIXED per-key medians trained at deployment
-    * ([[graft.operators.AnalyticsOps.leveneMedians]]), so the state —
-    * B55's (key, n, Σz, Σz²) co-moment grid — is mergeable integer
-    * state, folded per micro-batch by a full-outer exact ADD (the D14
-    * associativity argument verbatim), and
-    * [[graft.operators.AnalyticsOps.leveneFromComoments]] applied to
-    * the folded grid IS the whole-history batch statistic bit-for-bit
-    * on any batch split. State ≤ |keys| rows per snapshot forever,
-    * under `stateDir/batch=<id>` with latest-prior reads + the
-    * retention sweep.
+    * LIVE gate, the drift family's VARIANCE axis (D16 watches the mean,
+    * D17 the omnibus ranks, D18 the CDF shape). Deviations are taken
+    * from the FIXED per-key medians trained at deployment
+    * ([[graft.operators.AnalyticsOps.leveneMedians]]). State: B55's
+    * (event_type, n, s, q) co-moment grid, ≤ |keys| rows. Merge:
+    * [[addInto]] the batch's co-moments, so
+    * [[graft.operators.AnalyticsOps.leveneFromComoments]] over the
+    * folded grid IS the whole-history batch statistic.
     */
   def streamingLevene(events: DataFrame, medians: DataFrame,
-      stateDir: String, retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("value"))
-          .localCheckpoint(true)
-        try {
-          val bG = graft.operators.AnalyticsOps.leveneComoments(b, medians)
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bG
-            case Some(p) => p
-              .select(col("event_type"), col("n").as("n0"),
-                col("s").as("s_0"), col("q").as("q_0"))
-              .join(bG, Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("n0"), lit(0L))
-                  + coalesce(col("n"), lit(0L))).as("n"),
-                (coalesce(col("s_0"), lit(0).cast(DecimalType(38, 0)))
-                  + coalesce(col("s"), lit(0).cast(DecimalType(38, 0))))
-                  .as("s"),
-                (coalesce(col("q_0"), lit(0).cast(DecimalType(38, 0)))
-                  + coalesce(col("q"), lit(0).cast(DecimalType(38, 0))))
-                  .as("q"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      stateDir: String, retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "value"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, AnalyticsOps.leveneComoments(b, medians), "event_type")
+    }
 
-  /** The live D19 statistic: B55's exact math over the latest folded
-    * co-moment grid.
-    */
-  def latestLevene(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.leveneFromComoments(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D19 statistic: B55's exact math over the latest grid. */
+  def latestLevene(spark: SparkSession, stateDir: String): DataFrame =
+    AnalyticsOps.leveneFromComoments(latest(spark, stateDir))
 
-  /** D20: streaming Jarque–Bera normality monitor — B56 LIVE,
-    * completing the drift family's parametric-SHAPE axis (D16 mean,
-    * D19 variance, D17/D18 nonparametric; this one watches the
-    * skewness/kurtosis the z-score thresholds assume). Deviations are
-    * taken from the FIXED per-key reference centers trained at
-    * deployment ([[graft.operators.AnalyticsOps.jbCenter]] — central
-    * moments are shift-invariant, so the frozen center changes
-    * nothing), making the state — B56's (key, n, Σz..Σz⁴) grid —
-    * mergeable integer state folded by a full-outer exact ADD, and
-    * [[graft.operators.AnalyticsOps.jarqueBeraFromComoments]] over
-    * the folded grid IS the whole-history batch statistic bit-for-bit
-    * on any batch split. State ≤ |keys| rows per snapshot.
+  /** D20: streaming Jarque–Bera normality monitor — B56 LIVE, the drift
+    * family's parametric-SHAPE axis. Deviations are taken from the
+    * FIXED per-key reference centers trained at deployment
+    * ([[graft.operators.AnalyticsOps.jbCenter]] — central moments are
+    * shift-invariant). State: B56's (event_type, n, s1..s4) power-sum
+    * grid, ≤ |keys| rows. Merge: [[addInto]] the batch's sums, so
+    * [[graft.operators.AnalyticsOps.jarqueBeraFromComoments]] over the
+    * folded grid IS the whole-history batch statistic.
     */
   def streamingJarqueBera(events: DataFrame, center: DataFrame,
-      stateDir: String, retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("value"))
-          .localCheckpoint(true)
-        try {
-          val bG = graft.operators.AnalyticsOps.jarqueBeraComoments(b, center)
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val zero = lit(0).cast(DecimalType(38, 0))
-          val merged = prior match {
-            case None => bG
-            case Some(p) => p
-              .select(col("event_type"), col("n").as("n0"),
-                col("s1").as("s1_0"), col("s2").as("s2_0"),
-                col("s3").as("s3_0"), col("s4").as("s4_0"))
-              .join(bG, Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("n0"), lit(0L))
-                  + coalesce(col("n"), lit(0L))).as("n"),
-                (coalesce(col("s1_0"), zero)
-                  + coalesce(col("s1"), zero)).as("s1"),
-                (coalesce(col("s2_0"), zero)
-                  + coalesce(col("s2"), zero)).as("s2"),
-                (coalesce(col("s3_0"), zero)
-                  + coalesce(col("s3"), zero)).as("s3"),
-                (coalesce(col("s4_0"), zero)
-                  + coalesce(col("s4"), zero)).as("s4"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      stateDir: String, retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "value"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, AnalyticsOps.jarqueBeraComoments(b, center), "event_type")
+    }
 
-  /** The live D20 statistic: B56's exact math over the latest folded
-    * grid.
-    */
-  def latestJarqueBera(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.jarqueBeraFromComoments(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D20 statistic: B56's exact math over the latest grid. */
+  def latestJarqueBera(spark: SparkSession, stateDir: String): DataFrame =
+    AnalyticsOps.jarqueBeraFromComoments(latest(spark, stateDir))
 
   /** D17: streaming Kruskal–Wallis — B54's omnibus rank gate LIVE.
-    * The state is B54's (event_type, value, c) count grid: per
-    * micro-batch one partial-agg groupBy, a full-outer integer ADD
-    * into the prior snapshot (the D14 associativity argument
-    * verbatim), and [[graft.operators.AnalyticsOps.kruskalFromCounts]]
-    * applied to the folded grid IS the whole-history batch statistic
-    * bit-for-bit — rank grids are a pure function of the counts, so
-    * even a rank-based test streams losslessly once its sufficient
-    * statistic is the count table. State is |keys × distinct values|
-    * rows (the same bounded domain B54's quarantine guards), under
-    * `stateDir/batch=<id>` with latest-prior reads + the retention
-    * sweep.
+    * State: B54's (event_type, value, c) count grid, |keys × distinct
+    * values| rows (the domain B54's quarantine guards). Merge:
+    * [[addInto]] the batch's counts. Rank grids are a pure function of
+    * the counts, so [[graft.operators.AnalyticsOps.kruskalFromCounts]]
+    * over the folded grid IS the whole-history batch statistic.
     */
   def streamingKruskal(events: DataFrame, stateDir: String,
-      retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("event_type"), col("value"))
-          .localCheckpoint(true)
-        try {
-          val bObs = b.groupBy("event_type", "value")
-            .agg(count(lit(1)).as("c"))
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bObs
-            case Some(p) => p
-              .select(col("event_type"), col("value"), col("c").as("c0"))
-              .join(bObs, Seq("event_type", "value"), "full_outer")
-              .select(col("event_type"), col("value"),
-                (coalesce(col("c0"), lit(0L)) + coalesce(col("c"), lit(0L)))
-                  .as("c"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "value"), stateDir,
+        retainBatches) { (b, prior) =>
+      addInto(prior, b.groupBy("event_type", "value").agg(count(lit(1)).as("c")),
+        "event_type", "value")
+    }
 
-  /** The live D17 statistic: B54's exact math over the latest folded
-    * count grid.
-    */
-  def latestKruskal(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.kruskalFromCounts(
-      all.filter(col("batch") === latest).drop("batch"))
-  }
+  /** The live D17 statistic: B54's exact math over the latest grid. */
+  def latestKruskal(spark: SparkSession, stateDir: String): DataFrame =
+    AnalyticsOps.kruskalFromCounts(latest(spark, stateDir))
 
   /** D18: streaming binned Kolmogorov–Smirnov — B44's production
-    * variant as the LIVE distribution-SHAPE gate (the classic online
-    * drift monitor: has any key's value distribution diverged from
-    * the pooled rest since deployment?). The state is the
-    * (event_type, bin, c) half-up-quantized count grid — bounded by
-    * CONSTRUCTION (that is exactly why the binned form exists) — and
-    * the fold is the D17 full-outer integer ADD, so the folded grid
-    * equals the whole-history grid bit-for-bit and
-    * [[graft.operators.AnalyticsOps.ksBinnedFromCounts]] applied to
-    * it IS the batch statistic: CDFs, like ranks, are a pure function
-    * of the counts. Snapshots under `stateDir/batch=<id>`,
-    * latest-prior reads, retention sweep.
+    * variant as the LIVE distribution-SHAPE gate. State: the
+    * (event_type, bin, c) half-up-quantized count grid, bounded by
+    * construction. Merge: [[addInto]] the batch's counts. CDFs, like
+    * ranks, are a pure function of the counts, so
+    * [[graft.operators.AnalyticsOps.ksBinnedFromCounts]] over the folded
+    * grid IS the whole-history batch statistic.
     */
   def streamingKsBinned(events: DataFrame, stateDir: String,
-      decimals: Int = 2, retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val scale = math.pow(10.0, decimals)
-        val b = batch.select(col("event_type"), col("value"))
-          .localCheckpoint(true)
-        try {
-          val bObs = b.select(col("event_type"),
-              floor(col("value") * lit(scale) + lit(0.5)).cast("long")
-                .as("bin"))
-            .groupBy("event_type", "bin").agg(count(lit(1)).as("c"))
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => bObs
-            case Some(p) => p
-              .select(col("event_type"), col("bin"), col("c").as("c0"))
-              .join(bObs, Seq("event_type", "bin"), "full_outer")
-              .select(col("event_type"), col("bin"),
-                (coalesce(col("c0"), lit(0L)) + coalesce(col("c"), lit(0L)))
-                  .as("c"))
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      decimals: Int = 2, retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(events, Seq("event_type", "value"), stateDir,
+        retainBatches) { (b, prior) =>
+      val scale = math.pow(10.0, decimals)
+      addInto(prior, b.select(col("event_type"),
+          floor(col("value") * lit(scale) + lit(0.5)).cast("long").as("bin"))
+        .groupBy("event_type", "bin").agg(count(lit(1)).as("c")),
+        "event_type", "bin")
+    }
 
   /** The live D18 statistic: B44-binned's exact math over the latest
-    * folded count grid.
+    * grid.
     */
-  def latestKsBinned(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, decimals: Int = 2): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    graft.operators.AnalyticsOps.ksBinnedFromCounts(
-      all.filter(col("batch") === latest).drop("batch"), decimals)
-  }
+  def latestKsBinned(spark: SparkSession, stateDir: String,
+      decimals: Int = 2): DataFrame =
+    AnalyticsOps.ksBinnedFromCounts(latest(spark, stateDir), decimals)
 
-  /** D1: streaming hourly mart — per (event_type, 1h window) mean,
-    * 10-minute watermark. Works on any streaming DataFrame with the
-    * events schema (tests feed it from MemoryStream).
-    */
   /** D22: streaming RESERVOIR sample — C46's deterministic
-    * corpus-global k-draw over an UNBOUNDED stream: the k smallest
-    * seeded-md5 priorities are a MERGEABLE summary (top-k of a union
-    * is the top-k of per-part top-k's, and the (priority, doc_id)
-    * order is total), so the state is ≤ k rows forever and the live
-    * sample equals the batch draw over the whole history BIT-FOR-BIT
-    * on any batch split — the deterministic form of reservoir
-    * sampling, with rerun/replay stability the classical
-    * random-replacement reservoir cannot offer (same latest-prior
-    * snapshot shape as D11-D20). The prior∪batch merge dedups on
-    * doc_id before the limit(k) (the union is ≤ 2k rows, so the
-    * dropDuplicates is free), so a RE-DELIVERED doc — an at-least-once
-    * upstream — occupies one slot, not two, and the live sample stays
-    * equal to the batch draw without assuming D5's exactly-once
-    * contract.
+    * corpus-global k-draw over an UNBOUNDED stream. State: the k rows
+    * with the smallest seeded-md5 priorities. Merge: top-k of
+    * prior ∪ batch — top-k of a union is the top-k of per-part top-k's
+    * and the (priority, doc_id) order is total, so the live sample
+    * equals the batch draw over the whole history BIT-FOR-BIT on any
+    * batch split. The merge dedups on doc_id before the limit(k) (the
+    * union is ≤ 2k rows), so a RE-DELIVERED doc from an at-least-once
+    * upstream occupies one slot, not two.
     */
   def streamingSample(docs: DataFrame, stateDir: String, k: Int = 100,
-      seed: String = "graft", retainBatches: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("doc_id"), col("source"))
-          .localCheckpoint(true)
-        try {
-          val scored = graft.operators.TextOps.sampleTopK(b, k, seed)
-          val prior: Option[DataFrame] =
-            if (!new java.io.File(stateDir).exists()) None
-            else {
-              val all = spark.read.parquet(stateDir)
-                .filter(col("batch") < lit(id))
-              val latest = all.agg(max("batch")).head()
-              if (latest.isNullAt(0)) None
-              else Some(all.filter(col("batch") === latest.get(0))
-                .drop("batch").localCheckpoint(true))
-            }
-          val merged = prior match {
-            case None => scored
-            case Some(p) => p.unionByName(scored)
-              .dropDuplicates("doc_id")
-              .orderBy(col("prio"), col("doc_id")).limit(k)
-          }
-          merged.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          pruneSnapshots(stateDir, id, retainBatches)
-          prior.foreach { p =>
-            org.apache.spark.sql.graftx.bridge.checkpointRdd(p)
-              .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          }
-        } finally {
-          org.apache.spark.sql.graftx.bridge.checkpointRdd(b)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-          graft.CacheRegistry.unpersistAll()
-        }
-      }
+      seed: String = "graft", retainBatches: Int = 3): DataStreamWriter[Row] =
+    snapshotFold(docs, Seq("doc_id", "source"), stateDir,
+        retainBatches) { (b, prior) =>
+      val scored = TextOps.sampleTopK(b, k, seed)
+      prior.fold(scored)(_.unionByName(scored).dropDuplicates("doc_id")
+        .orderBy(col("prio"), col("doc_id")).limit(k))
+    }
 
   /** The live D22 sample: the latest carried k-draw. */
-  def latestSample(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val all = spark.read.parquet(stateDir)
-    val latest = all.agg(max("batch")).head().get(0)
-    all.filter(col("batch") === latest).drop("batch")
-  }
-
+  def latestSample(spark: SparkSession, stateDir: String): DataFrame =
+    latest(spark, stateDir)
   /** D7: stream-STATIC scoring join — the online half of B28: a
     * batch-built stats table (tiny, one row per key) broadcast onto
     * the live stream, each event scored and flagged as it arrives.
@@ -1190,6 +719,10 @@ object StreamOps {
     graft.operators.AgriOps.hourlyFromGrid(
       spark.readStream.format("graft-grid").load())
 
+  /** D1: streaming hourly mart — per (event_type, 1h window) mean,
+    * 10-minute watermark. Works on any streaming DataFrame with the
+    * events schema (tests feed it from MemoryStream).
+    */
   // r15 (VERDICT r14 #5): built from the SAME hourlyState/hourlyFinish
   // pair the oracle-hashed gate drains, so batch/stream parity is
   // structural; the exact-decimal buffers also make the published mart
@@ -1287,7 +820,6 @@ object StreamOps {
     * session ids — the declarative twin of [[sessionize]].
     */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val gapMs = gapMinutes * 60000L
     events

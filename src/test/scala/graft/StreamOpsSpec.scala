@@ -762,4 +762,99 @@ class StreamOpsSpec extends SparkSpec {
     assert(frozen.exceptAll(streamed).count() === 0)
     CacheRegistry.unpersistAll()
   }
+
+  private def snapshotDirs(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+      .map(_.getName).sorted.toSeq
+
+  private def driftBatch(b: Int): Seq[Event] = {
+    val ts0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    (1 to 60).map { i =>
+      Event(b * 1000L + i, new Timestamp(ts0 + i * 1000L), (i + b * 7) % 11L,
+        Seq("a", "b", "c")(i % 3), ((i % 7) + b * (i % 3)).toDouble, "{}") }
+  }
+
+  /** Snapshot storage goes through the Hadoop FileSystem of the state
+    * dir, so a `file:` URI carries the prior state and is pruned
+    * exactly like a plain local path.
+    */
+  test("snapshot fold carries and prunes state under a file: URI state dir") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("fold_uri").toString
+    val stream = MemoryStream[Event]
+    val q = StreamOps.streamingKruskal(stream.toDF(), s"file://$base/state",
+        retainBatches = 2)
+      .option("checkpointLocation", s"$base/ckpt")
+      .start()
+    (0 until 4).foreach { b =>
+      stream.addData(driftBatch(b)); q.processAllAvailable()
+    }
+    q.stop()
+    assert(snapshotDirs(s"$base/state") === Seq("batch=2", "batch=3"))
+    val all = spark.read.parquet(s"$base/state")
+    val latest = all.filter(col("batch") === all.agg(max("batch")).head.get(0))
+    assert(latest.agg(sum("c")).head.getLong(0) === 240L,
+      "the latest snapshot must fold all four batches")
+    CacheRegistry.unpersistAll()
+  }
+
+  /** A monitor releases only the batch and prior snapshot it pinned:
+    * pins another operator registered in the same session survive.
+    */
+  test("a monitor batch leaves results held elsewhere in the session readable") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val held = graft.operators.DedupOps.dedupGroups(docs)
+    val base = java.nio.file.Files.createTempDirectory("fold_scope").toString
+    val stream = MemoryStream[Event]
+    val q = StreamOps.streamingKruskal(stream.toDF(), s"$base/state")
+      .option("checkpointLocation", s"$base/ckpt")
+      .start()
+    stream.addData(driftBatch(0))
+    q.processAllAvailable()
+    q.stop()
+    assert(held.count() === docs.count())
+    CacheRegistry.unpersistAll()
+  }
+
+  /** The crash-replay contract: a batch whose commit was lost is
+    * replayed on restart, recomputes from the latest snapshot before
+    * it, and overwrites only its own dir — the statistic and the set
+    * of snapshot dirs are unchanged, and still equal the batch
+    * statistic over the whole history. The state dir is a `file:` URI,
+    * so the replay also runs through the Hadoop FileSystem path.
+    */
+  test("a monitor batch replayed after a lost commit leaves the same state") {
+    import spark.implicits._
+    val events = (0 until 3).flatMap(driftBatch).toDF()
+    val base = java.nio.file.Files.createTempDirectory("fold_replay").toString
+    events.repartitionByRange(3, col("event_id")).write.parquet(s"$base/in")
+    val stateDir = s"file://$base/state"
+    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val in = spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
+      val q = StreamOps.streamingChiSquare(in, stateDir, retainBatches = 2)
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
+    assert(drain().recentProgress.map(_.batchId).toSeq === Seq(0L, 1L, 2L))
+    val before = StreamOps.latestChiSquare(spark, stateDir).collect().toSet
+    val dirsBefore = snapshotDirs(s"$base/state")
+    Seq("2", ".2.crc").foreach(f => java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$base/ckpt/commits/$f")))
+    assert(drain().recentProgress.map(_.batchId).toSeq === Seq(2L),
+      "the restart must replay exactly the uncommitted batch")
+    val live = StreamOps.latestChiSquare(spark, stateDir)
+    assert(live.collect().toSet === before)
+    assert(snapshotDirs(s"$base/state") === dirsBefore)
+    val twin = graft.operators.AnalyticsOps.chiSquare(events)
+    assert(live.except(twin).isEmpty && twin.except(live).isEmpty)
+    CacheRegistry.unpersistAll()
+  }
 }
