@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: every SparkEntry query, warmup + MEDIAN OF 3
   * timed cold-cache passes (a single pass on a noisy shared host
@@ -131,27 +132,19 @@ object Bench {
     val runT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - runT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Harness.envList("SPARK_GRAFT_BENCH_ONLY")
     // r11: SKIP list for large-SF runs — the quarantined exact O(n²)
     // AUDIT queries (knn_brute, dedup_embedding, the *_recall gates
     // that embed a brute-force truth, the signature-calibration pair
-    // joins). Their quadratic growth is by design, guard-documented,
-    // and ScaleSmoke-measured; at 10× corpus they would dominate the
+    // joins). Their quadratic growth is by design and guard-documented
+    // (compare sf0.1 vs MakeScaled ×10 with bench_ratio.py to measure
+    // it); at 10× corpus they would dominate the
     // artifact without saying anything about the production paths.
     // A skipped name is recorded in the JSON so the artifact is
     // self-describing, never silently truncated.
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val spark = SparkSession.builder()
-      .withExtensions(new org.apache.spark.sql.graftx.GraftSparkExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val skip = Harness.envList("SPARK_GRAFT_BENCH_SKIP").toSet
+    val selected = Harness.select(only).filter { case (n, _) => !skip(n) }
+    val spark = Harness.session()
 
     // cumulative executor run time (ms) across all completed stages
     val execMs = new AtomicLong(0L)
@@ -164,18 +157,7 @@ object Bench {
         .waitListenerBusEmpty(spark.sparkContext)
       execMs.get()
     }
-    def clearAll(): Unit = {
-      spark.catalog.clearCache()
-      CacheRegistry.unpersistAll()
-      // Safety net for anything neither path tracks (e.g. a future
-      // operator's localCheckpoint): between queries NOTHING should
-      // stay persisted, and leaked checkpoint blocks were exactly the
-      // r4 cross-query contamination — dead storage shrinking unified
-      // execution memory for later queries until the async
-      // ContextCleaner caught up.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-    }
+    def clearAll(): Unit = Harness.release(spark)
 
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
@@ -193,7 +175,7 @@ object Bench {
           jsonSanitize(Option(t.getMessage).getOrElse("")))
       }
 
-    val subset = only.isDefined
+    val subset = only.nonEmpty
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (subset) "BENCH_subset.json" else "BENCH_full.json")
     // incremental per-query record: survives any kill (VERDICT r12 #1b)
@@ -211,10 +193,7 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val passesQ = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val deferred = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .filter { case (name, _) => !skip.contains(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
         if (elapsedSec > DeadlineSec) { deferred += name }
         else {
         val serving = ServingQueries.contains(name)
@@ -458,7 +437,7 @@ object Bench {
       // artifact's 3.1x-lower stage totals turned out to be the 4-cpu
       // default vs 32 — executorRunTime sums grow with task count, so
       // cross-artifact stage ratios are only meaningful at equal cpus)
-      s""","cpus":${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}""" +
+      s""","cpus":${Harness.cpus}""" +
       s""","errors":$es,"passes":$TimedPasses,"forked":$forked,"sf":"$sfDir"}"""
     println(line)
     // Subset runs (SPARK_GRAFT_BENCH_ONLY) default to a DIFFERENT file:
@@ -498,10 +477,8 @@ object Bench {
     */
   private def forkMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n)))
+    val only = Harness.envList("SPARK_GRAFT_BENCH_ONLY")
+    val names = Harness.select(only).map(_._1)
     val timings = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Double, Double, Double)]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -511,7 +488,7 @@ object Bench {
         case Left(err) => errors(name) = err
       }
     }
-    emit(timings, errors, sfDir, forked = true, subset = only.isDefined)
+    emit(timings, errors, sfDir, forked = true, subset = only.nonEmpty)
   }
 
   /** Run ONE query's bench (warmup + `passes` timed passes; 0 =
@@ -548,7 +525,7 @@ object Bench {
       new java.io.File("/dev/null")))
     val code = pb.start().waitFor()
     val json = try new String(java.nio.file.Files.readAllBytes(out)) catch {
-      case _: Throwable => ""
+      case NonFatal(_) => ""
     }
     java.nio.file.Files.deleteIfExists(out)
     java.nio.file.Files.deleteIfExists(

@@ -1,46 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new org.apache.spark.sql.graftx.GraftSparkExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // dev subset (comma-separated names): iterate on one oracle
     // without paying the full 100+-query dump. The driver never sets
     // this, so the official gate always runs everything.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names.contains).toMap
-      case None => SparkEntry.queries
-    }
+    val selected = Harness.select(Harness.envList("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = Harness.session()
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release operator-persisted intermediates: 40+ queries share
-      // this JVM, leaked cache evicts useful blocks and leaks disk
-      CacheRegistry.unpersistAll()
-      // safety net for anything the registry doesn't track (e.g. a
-      // future operator's unregistered localCheckpoint) — Bench has
-      // carried the same sweep since r4; Verify runs ~190 queries in
-      // one JVM against the same shrinking-execution-memory hazard
-      // (ADVICE r11)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+      // ~190 queries share this JVM: leaked cache evicts useful blocks
+      // and leaks disk (ADVICE r11)
+      Harness.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

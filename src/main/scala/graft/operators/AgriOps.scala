@@ -257,7 +257,7 @@ object AgriOps {
     * oracle, so every round re-proves the codec seam yields
     * bit-identical data through the same pruning/pushdown machinery.
     *
-    * Tiles are materialized ONCE per JVM (lazy val) and removed on
+    * Tiles are materialized ONCE per JVM (TempDirs.onceDir) and removed on
     * exit: the extract/download is not part of this READ query, so a
     * bench pass times decoding, not tile writing — and repeated
     * invocations (warmups + timed passes + verify) reuse one ~9-file
@@ -265,24 +265,16 @@ object AgriOps {
     * skipExisting backfill path keeps its own writer-owned dirs in
     * GridSourceSpec.
     */
-  private lazy val filesTileDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_tiles")
-    // deliberately MIXED layout: r0's tiles are ZIP-wrapped containers,
-    // r1/r2 are bare GRD — so the per-round A25 oracle re-proves the
-    // transparent container unwrap (aggregate_hourly.py:32-45's
-    // _extract_first_nc analog) alongside the plain path every round
-    graft.sources.grid.GridFiles.write(dir.toString,
-      Seq("r0", "r1", "r2"), 3, 8, 8,
-      zipWrap = (region, _) => region == "r0")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      try Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      catch { case _: Throwable => () }
-    }))
-    dir.toString
-  }
+  private def filesTileDir: String =
+    graft.TempDirs.onceDir("graft_grid_tiles") { dir =>
+      // deliberately MIXED layout: r0's tiles are ZIP-wrapped containers,
+      // r1/r2 are bare GRD — so the per-round A25 oracle re-proves the
+      // transparent container unwrap (aggregate_hourly.py:32-45's
+      // _extract_first_nc analog) alongside the plain path every round
+      graft.sources.grid.GridFiles.write(dir,
+        Seq("r0", "r1", "r2"), 3, 8, 8,
+        zipWrap = (region, _) => region == "r0")
+    }
 
   def gridFilesMart(spark: SparkSession): DataFrame =
     gridMartOf(spark.read.format("graft-grid")

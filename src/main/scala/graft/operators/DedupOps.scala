@@ -854,7 +854,7 @@ object DedupOps {
     val edges = pinReliable(edgesRaw, checkpointDir)
     graft.CacheRegistry.releaseSince(cacheMark)
     val labels = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
-    releaseBlocks(edges)
+    graft.CacheRegistry.releaseCheckpoint(edges)
     // r14 (guide §2.4): sizes from the LABELS leaf, not from the
     // corpus-wide `all` frame — every member of a multi-node component
     // touches an edge, so it is labeled, and component sizes over
@@ -935,18 +935,6 @@ object DedupOps {
       finally pool.shutdown()
     (ra, rb)
   }
-
-  /** Release a `localCheckpoint`ed frame's pinned blocks NOW.
-    * Checkpoint blocks are released DETERMINISTICALLY, not left to the
-    * async ContextCleaner: without this, five clustering queries per
-    * bench pass stack dead blocks in the BlockManager and shrink
-    * unified execution memory for every query after them (VERDICT r4
-    * #2) — and a production session running the pipeline repeatedly
-    * leaks the same way.
-    */
-  private def releaseBlocks(df: DataFrame): Unit =
-    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-      .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
 
   /** Eager checkpoint, durability chosen by the caller: with a
     * `checkpointDir` the frame goes to RELIABLE storage
@@ -1084,8 +1072,8 @@ object DedupOps {
         }
       // next is materialized (eager checkpoint): this round's cand and
       // the previous labels are dead weight from here on
-      releaseBlocks(cand)
-      if (labels != null) releaseBlocks(labels)
+      graft.CacheRegistry.releaseCheckpoint(cand)
+      if (labels != null) graft.CacheRegistry.releaseCheckpoint(labels)
       // empty sum ⟺ zero rows ⟺ no edges at all: converged by
       // definition (without this, an edge-free corpus burned all
       // maxIters rounds on empty frames)
@@ -1154,7 +1142,7 @@ object DedupOps {
     }, priorLabels)
     foldClosure(union.select(col("doc_id")), prior, pinnedPairs,
       maxIters, checkpointDir, reliableEvery,
-      afterEdgesPinned = () => releaseBlocks(pinnedPairs))
+      afterEdgesPinned = () => graft.CacheRegistry.releaseCheckpoint(pinnedPairs))
   }
 
   /** The collapsed-closure FOLD kernel shared by [[dedupIncremental]]
@@ -1186,7 +1174,7 @@ object DedupOps {
     val edges = pinReliable(bothDirections(e0), checkpointDir)
     afterEdgesPinned()
     val moved = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
-    releaseBlocks(edges)
+    graft.CacheRegistry.releaseCheckpoint(edges)
     // fan out: doc → its collapsed node → the node's new label (nodes
     // untouched by any new edge keep their prior component)
     val nodes = unionIds

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: stages 1-2 and 4-5 are map/groupBy-local passes; the
   * only super-linear machinery is stage 3's prefix-filtered
   * similarity join + log-round label propagation, both already
-  * audited at 10× in ScaleSmoke. Stages share nothing across rounds,
+  * audited at 10× in scale runs. Stages share nothing across rounds,
   * so the pipeline is a straight-line DAG — no iteration at the top
   * level, safe to checkpoint between stages at 100 TB.
   */

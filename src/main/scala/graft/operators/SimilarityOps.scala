@@ -444,14 +444,14 @@ object SimilarityOps {
     // stage (an A/B with persist+eager count measured 1753 s stage vs
     // 337 s for the leaf — the leaf's join planning, not eagerness,
     // is most of the win). REGISTERED with CacheRegistry (ADVICE
-    // r11): every harness (Bench, Verify, ScaleSmoke, tests) calls
+    // r11): every harness (Bench, Verify, Dev, tests) calls
     // unpersistAll only AFTER the consuming action, so the release-
     // between-construction-and-consumption hazard never occurs there
     // — and the same contract already governs mmrRerank/
     // kCenterSample/bpeTrain's registered checkpoints. Unregistered,
     // the leaf's pinned blocks (vec_id + embedding + L·P projection
     // doubles — the operator's widest frame) would survive until GC
-    // in long-lived Verify/ScaleSmoke JVMs, shrinking unified
+    // in long-lived Verify/Bench JVMs, shrinking unified
     // execution memory for the ~190 queries that follow (the r4
     // contamination mode CacheRegistry exists to prevent). The extra
     // n-row exchange is trivially linear and matches the layout a
@@ -890,9 +890,7 @@ object SimilarityOps {
     import org.apache.spark.sql.types.DecimalType
     require(k >= 2 && iters >= 0, "need k >= 2 clusters, iters >= 0")
     val bridge = org.apache.spark.sql.graftx.bridge
-    def release(df: DataFrame): Unit =
-      bridge.checkpointRdd(df)
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    import graft.CacheRegistry.{releaseCheckpoint => release}
     val e = embeddings.select(col("vec_id"), col("embedding"))
     def update(asg: DataFrame): DataFrame = {
       val q = floor(col("val").cast("double") * lit(1048576.0))
@@ -1047,9 +1045,7 @@ object SimilarityOps {
     import org.apache.spark.sql.types.DecimalType
     require(ksub >= 2 && iters >= 0, "need ksub >= 2 codes, iters >= 0")
     val bridge = org.apache.spark.sql.graftx.bridge
-    def release(df: DataFrame): Unit =
-      bridge.checkpointRdd(df)
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    import graft.CacheRegistry.{releaseCheckpoint => release}
     def update(asg: DataFrame): DataFrame = {
       val q = floor(col("val") * lit(1048576.0)).cast(DecimalType(38, 0))
       subv.join(asg, Seq("vec_id", "sub"))
@@ -1400,8 +1396,8 @@ object SimilarityOps {
     * identical. Components via [[DedupOps.propagateMin]] — the SAME
     * battle-tested min-label loop (pointer halving, eager plain
     * checkpoints, deterministic block release) the lexical family
-    * runs, so its 100 TB evidence (giant-component / k=100
-    * ScaleSmoke) carries over unchanged.
+    * runs, so its 100 TB evidence (giant-component and
+    * k=100 scale runs) carries over unchanged.
     */
   def dedupSemantic(embeddings: DataFrame, minCosine: Double = 0.4,
       maxExactRows: Long = 100000L,
@@ -1417,8 +1413,7 @@ object SimilarityOps {
       .localCheckpoint(true)
     val labels = DedupOps.propagateMin(edges, 50, None, 10)
       .withColumnRenamed("doc_id", "vec_id")
-    org.apache.spark.sql.graftx.bridge.checkpointRdd(edges)
-      .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    graft.CacheRegistry.releaseCheckpoint(edges)
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("n_members"))
     embeddings.select(col("vec_id"))
       .join(labels, Seq("vec_id"), "left")
@@ -1485,7 +1480,7 @@ object SimilarityOps {
       minCosine: Double = 0.4, k: Int = 5, floor: Double = 0.8,
       maxExactRows: Long = 100000L): DataFrame = {
     // r15 (guide §2.6): the exact and ANN closures are INDEPENDENT
-    // eager job chains — JobProf showed 246 nearly-sequential sub-50 ms
+    // eager job chains — `Dev jobs` showed 246 nearly-sequential sub-50 ms
     // jobs (14.6 s wall against 22.5 s TOTAL stage over 32 cores at
     // sf0.1), i.e. the gate's wall was the SUM of two latency-bound
     // loops. Run them from two driver threads so each chain's tiny
@@ -1576,9 +1571,7 @@ object SimilarityOps {
       union.select(col("vec_id").as("doc_id")),
       prior.select(col("vec_id").as("doc_id"), col("component")),
       pinnedPairs,
-      afterEdgesPinned = () =>
-        org.apache.spark.sql.graftx.bridge.checkpointRdd(pinnedPairs)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () }))
+      afterEdgesPinned = () => graft.CacheRegistry.releaseCheckpoint(pinnedPairs))
     out.withColumnRenamed("doc_id", "vec_id")
   }
 

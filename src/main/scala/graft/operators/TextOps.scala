@@ -457,8 +457,7 @@ object TextOps {
     * which also drops their near-zero idf contribution.
     */
   def bm25(documents: DataFrame, nQueries: Int = 5, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75,
-      queryPred: Option[Column] = None): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val tf = documents
@@ -469,9 +468,7 @@ object TextOps {
       (sum(col("dl").cast(DecimalType(20, 6))).cast("double")
         / count(lit(1))).as("avgdl"))
     val dfv = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    // queryPred overrides the default probe-set selection (ScaleSmoke
-    // uses it to grow the query side with the corpus)
-    val qterms = tf.filter(queryPred.getOrElse(col("doc_id") < nQueries))
+    val qterms = tf.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("q_id"), col("tok"))
     val idf = log(lit(1.0) +
       (col("n_docs").cast("double") - col("df") + lit(0.5))
@@ -1081,9 +1078,7 @@ object TextOps {
     require(rounds >= 1 && rounds <= 16,
       s"BPE merge rounds is a small fixed dial, got $rounds")
     val bridge = org.apache.spark.sql.graftx.bridge
-    def release(df: DataFrame): Unit =
-      bridge.checkpointRdd(df)
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    import graft.CacheRegistry.{releaseCheckpoint => release}
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     var cur = bridge.plainLocalCheckpoint(
       documents.select(col("doc_id"),
@@ -1139,9 +1134,7 @@ object TextOps {
     require(batch >= 1 && batch <= 64,
       s"BPE merges per round is a small fixed dial, got $batch")
     val bridge = org.apache.spark.sql.graftx.bridge
-    def release(df: DataFrame): Unit =
-      bridge.checkpointRdd(df)
-        .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    import graft.CacheRegistry.{releaseCheckpoint => release}
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     // curCk is the release HANDLE (the raw checkpoint leaf — from
     // round 1 on, `cur` is a projection over it and checkpointRdd
@@ -1775,7 +1768,7 @@ object TextOps {
     * Scale shape: a PURE MAP — the whole histogram + entropy runs
     * inside one codegen'd expression per row (graftx.CharEntropy),
     * no explode, no shuffle. The first two formulations exploded one
-    * row per character and ScaleSmoke measured the explode volume
+    * row per character and a 10× scale run measured the explode volume
     * itself at ratio ~17 at 10× (both the substring-walk and the
     * split form — the (doc, char) partial agg was never the
     * problem); the native kernel is the same fix MultimodalOps took

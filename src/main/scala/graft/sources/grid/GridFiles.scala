@@ -2,6 +2,7 @@ package graft.sources.grid
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileInputStream, FileOutputStream}
 import java.io.File
+import scala.util.control.NonFatal
 
 /** On-disk tile codec for the `format=files` grid reader — the
   * stand-in for the reference's downloaded NetCDF tiles
@@ -238,7 +239,7 @@ object GridFiles {
         (in, entry.getSize)
       } catch {
         case e: Throwable =>
-          try zf.close() catch { case _: Throwable => () }
+          try zf.close() catch { case NonFatal(s) => e.addSuppressed(s) }
           throw e
       }
     } else

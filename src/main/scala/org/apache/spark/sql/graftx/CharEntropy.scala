@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: the declarative route explodes one row per character —
   * a 500-char doc becomes 500 shuffled (doc, char) rows before the
-  * per-doc reduce, and ScaleSmoke measured the explode volume itself
+  * per-doc reduce, and a 10× scale run measured the explode volume itself
   * as the cost (ratio ~17 at 10× for both the substring-walk and the
   * split form; the tiny (doc, char) partial agg was never the
   * problem). This expression keeps the whole computation inside the

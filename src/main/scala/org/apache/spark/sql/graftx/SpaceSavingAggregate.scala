@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * latest) are skipped on pop, and the heap is rebuilt whenever it
   * outgrows 4× capacity, bounding memory and amortizing eviction to
   * O(log capacity). The first cut scanned the whole table per
-  * eviction — "cache-resident, not the bottleneck" — and ScaleSmoke
+  * eviction — "cache-resident, not the bottleneck" — and a 10× scale run
   * falsified that at 10×: with distinct items ≫ capacity every miss
   * paid the O(capacity) scan and the operator measured ratio 156
   * (0.2 s → 34.4 s). The heap rewrite is the fix the measurement

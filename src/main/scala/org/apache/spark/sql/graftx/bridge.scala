@@ -3,13 +3,14 @@ package org.apache.spark.sql.graftx
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import scala.util.control.NonFatal
 
 /** Bridge into Spark's private[sql] Column↔Expression conversions, so
   * graft's native Catalyst expressions can be exposed as `Column`s.
   * Lives under org.apache.spark.sql.* solely for access; contains no
   * Spark code.
   */
-object bridge {
+object bridge extends org.apache.spark.internal.Logging {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
@@ -202,10 +203,15 @@ object bridge {
 
   /** Drain the listener bus so stage metrics observed by bench
     * listeners are complete before reading them (listener events are
-    * posted asynchronously). private[spark], hence bridged here.
+    * posted asynchronously). private[spark], hence bridged here. A bus
+    * that does not drain in time is logged: the metrics read next are
+    * then incomplete.
     */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext,
       timeoutMs: Long = 10000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      logWarning(s"listener bus not drained after $timeoutMs ms, " +
+        s"stage metrics read now are incomplete: $e")
+    }
 }

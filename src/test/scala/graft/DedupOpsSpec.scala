@@ -233,8 +233,8 @@ class DedupOpsSpec extends SparkSpec {
     import spark.implicits._
     // chain long enough for several propagation rounds (path diameter
     // 20): docs i and i+1 share 29 of 31 tokens (0.935 ≥ 0.7),
-    // distance-3 falls below τ — same construction as ScaleSmoke's
-    // giant component, tiny
+    // distance-3 falls below τ — the giant-component chain
+    // construction, at tiny n
     val docs = spark.range(20).select(
       col("id").as("doc_id"), lit("s").as("source"),
       concat_ws(" ", transform(

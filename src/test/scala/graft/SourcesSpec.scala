@@ -202,7 +202,8 @@ class SourcesSpec extends SparkSpec {
       .head().getDouble(0)
     assert(native === 32.0)
     assert(native === generic)
-    graft.functions.VectorFns.register(spark)
+    // no register call: the suite session is GraftSession's, which
+    // registers vec_dot itself
     df.createOrReplaceTempView("vecs")
     assert(spark.sql("SELECT vec_dot(a, b) AS d FROM vecs").head().getDouble(0) === 32.0)
   }
