@@ -2,31 +2,57 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-/** Tracks DataFrames persisted inside operators so harnesses (Verify,
-  * Bench, tests) can release them after the consuming action finishes.
+/** Tracks the caches operators pin — persisted frames and
+  * `localCheckpoint` RDDs — and releases them deterministically.
   * Without this, cached blocks accumulate across the 40+ queries a
   * single Verify JVM runs — evicting useful cache and leaking executor
   * disk in long-lived sessions.
+  *
+  * Lifetimes are lexical. A pin registered inside [[scoped]] belongs
+  * to the innermost scope its thread has open, and is released when
+  * that scope's body returns or throws: an operator scopes its own
+  * intermediates, a streaming fold scopes one micro-batch. A pin
+  * registered outside any scope goes to the root list, which a
+  * harness (Verify, Bench, tests) releases with [[unpersistAll]] after
+  * the consuming action; operator results live there. No scope ever
+  * releases a pin it did not register, so a result held elsewhere in
+  * the session stays readable.
   */
 object CacheRegistry {
-  // r15 (guide §2.6): entries carry the registering THREAD's id so
-  // that mark/releaseSince scope to the calling thread — operators now
-  // overlap independent eager pipelines from two driver threads (the
-  // incremental folds evaluate the prior closure concurrently with
-  // pair generation), and a global releaseSince would unpersist the
-  // OTHER thread's still-hot intermediates mid-probe. unpersistAll
-  // stays global (the harness's between-queries sweep).
-  private val live =
-    scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
-  private val liveRdds =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+  /** The release actions of one scope's pins. Guarded by the registry
+    * lock. A closed scope hands later registrations to the root list.
+    */
+  private final class Scope {
+    val pins = ArrayBuffer.empty[Boolean => Unit]
+    var closed = false
+  }
+  private val root = new Scope
+  private val open = ThreadLocal.withInitial[Scope](() => root)
+
+  private def register(release: Boolean => Unit): Unit = synchronized {
+    val s = open.get
+    (if (s.closed) root else s).pins += release
+  }
+
+  /** Close `s` (unless it is the root) and release its pins. */
+  private def drain(s: Scope, blocking: Boolean): Unit = {
+    val pins = synchronized {
+      if (s ne root) s.closed = true
+      val p = s.pins.toList
+      s.pins.clear()
+      p
+    }
+    pins.foreach(release =>
+      try release(blocking) catch { case NonFatal(_) => () })
+  }
 
   /** Persist at MEMORY_AND_DISK and remember the handle. */
-  def persist(df: DataFrame): DataFrame = synchronized {
+  def persist(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    live += ((Thread.currentThread().getId, p))
+    register(p.unpersist(_))
     p
   }
 
@@ -49,17 +75,17 @@ object CacheRegistry {
     if (leafBytes >= minInputBytes) persist(df) else df
   }
 
-  /** Register a `localCheckpoint`ed frame's pinned RDD for release by
-    * [[unpersistAll]]. `Dataset.unpersist` does not touch checkpoint
+  /** Register a `localCheckpoint`ed frame's pinned RDD for release with
+    * its scope. `Dataset.unpersist` does not touch checkpoint
     * blocks and the async ContextCleaner only reclaims them after GC
     * notices the RDD is unreachable — in a long-lived session running
     * the dedup pipeline repeatedly that lag stacks storage pressure
     * into exactly the queries that need execution memory (VERDICT r4
-    * #2). Registering gives the harness a deterministic release point.
+    * #2). Registering gives a deterministic release point.
     */
   def registerCheckpoint(df: DataFrame): DataFrame = {
-    val rdd = org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-    synchronized { rdd.foreach(liveRdds += _) }
+    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
+      .foreach(r => register(r.unpersist(_)))
     df
   }
 
@@ -76,53 +102,38 @@ object CacheRegistry {
       try r.unpersist(false) catch { case NonFatal(_) => () }
     }
 
-  /** Unpersist everything registered since the last call — by ANY
-    * thread (the harness sweep between queries).
+  /** Run `body` in a new scope: every pin this thread registers inside
+    * it (and not inside a nested scope) is released when `body`
+    * returns or throws. Pins registered before the scope, or by other
+    * threads, are left alone.
     */
-  def unpersistAll(blocking: Boolean = false): Unit = synchronized {
-    live.foreach { case (_, df) =>
-      try df.unpersist(blocking)
-      catch { case NonFatal(_) => () }
+  def scoped[T](body: => T): T = {
+    val outer = open.get
+    val s = new Scope
+    open.set(s)
+    try body
+    finally {
+      open.set(outer)
+      drain(s, blocking = false)
     }
-    live.clear()
-    liveRdds.foreach { r =>
-      try r.unpersist(blocking)
-      catch { case NonFatal(_) => () }
-    }
-    liveRdds.clear()
   }
 
-  /** Position marker for [[releaseSince]] — counts only the CALLING
-    * thread's registrations (thread-scoped since r15; single-threaded
-    * callers see the old global behavior unchanged).
+  /** `body` as a thunk that registers its pins in the scope open on
+    * the calling thread NOW, whichever thread later runs it — how
+    * [[graft.operators.DedupOps.inParallel]] keeps its second branch
+    * in its caller's scope.
     */
-  def mark(): Int = synchronized {
-    val tid = Thread.currentThread().getId
-    live.count(_._1 == tid)
+  private[graft] def inCallerScope[T](body: => T): () => T = {
+    val s = open.get
+    () => {
+      val outer = open.get
+      open.set(s)
+      try body finally open.set(outer)
+    }
   }
 
-  /** Unpersist only frames the CALLING thread registered after `m` —
-    * for an operator that fully materializes a sub-pipeline's result
-    * (e.g. a checkpoint) and wants its intermediates gone WITHOUT
-    * touching caches other operators — or a concurrently-running
-    * sibling pipeline on another driver thread — registered in the
-    * same session.
+  /** Release the root list: every pin registered outside any scope,
+    * by any thread (the harness sweep between queries).
     */
-  def releaseSince(m: Int, blocking: Boolean = false): Unit = synchronized {
-    val tid = Thread.currentThread().getId
-    var seen = 0
-    val keep = live.filter { case (t, df) =>
-      if (t != tid) true
-      else {
-        seen += 1
-        if (seen <= m) true
-        else {
-          try df.unpersist(blocking) catch { case NonFatal(_) => () }
-          false
-        }
-      }
-    }
-    live.clear()
-    live ++= keep
-  }
+  def unpersistAll(blocking: Boolean = false): Unit = drain(root, blocking)
 }

@@ -824,6 +824,9 @@ object DedupOps {
     * Edge-free docs never enter the loop — they are singleton
     * components by definition and join back at the end, so the
     * iterated state is |docs touching an edge|, not |corpus|.
+    *
+    * Requires `maxIters >= 1`: the closure has no 0-round form, so a
+    * 0 budget fails with IllegalArgumentException.
     */
   def dedupGroups(documents: DataFrame, minJaccard: Double = 0.7,
       maxIters: Int = 50, checkpointDir: Option[String] = None,
@@ -831,30 +834,9 @@ object DedupOps {
     // pair generation via the prefix-filtered join — identical output
     // to ngramJaccard (same oracle verifies both), measured ~2x faster
     // wall, and at τ=0.7 the prefix filter is at its most selective
-    val cacheMark = graft.CacheRegistry.mark()
-    val pairs = ngramJaccardPrefix(documents, minJaccard).select("id1", "id2")
-    // undirected: propagate along both directions of every edge.
-    // localCheckpoint (eager), not persist: the loop below joins edges
-    // every round, and with a persist the cached plan still carries the
-    // similarity join's lineage — AQE's stat estimates for it swing
-    // with the generator's plan shape and flipped the loop's join
-    // strategies (measured 2x regression switching generators).
-    // Checkpointing pins exact size stats; the generator's own caches
-    // are scope-released before the loop starts (edges is materialized,
-    // so nothing downstream re-reads them). With `checkpointDir` set
-    // the edge list goes to RELIABLE storage instead — executor loss
-    // cannot strand the whole loop's input (VERDICT r5 #8).
-    // r15 (guide §1.2): both directions via ONE explode, not
-    // pairs.union(pairs.swap) — the union's branches are separate
-    // physical subtrees, so everything past the last reusable exchange
-    // (the candidate groupBy's reduce side + the verify joins + the
-    // merge-scan intersect kernel) executed TWICE per call; the explode
-    // emits the identical edge multiset from a single evaluation.
-    val edgesRaw = bothDirections(pairs)
-    val edges = pinReliable(edgesRaw, checkpointDir)
-    graft.CacheRegistry.releaseSince(cacheMark)
-    val labels = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
-    graft.CacheRegistry.releaseCheckpoint(edges)
+    val labels = closure(
+      ngramJaccardPrefix(documents, minJaccard).select("id1", "id2"),
+      maxIters, checkpointDir, reliableEvery)
     // r14 (guide §2.4): sizes from the LABELS leaf, not from the
     // corpus-wide `all` frame — every member of a multi-node component
     // touches an edge, so it is labeled, and component sizes over
@@ -896,14 +878,39 @@ object DedupOps {
     * work past the last exchange (pair aggregation, verification joins,
     * the intersect merge-scan) ran once PER BRANCH. One explode of a
     * two-struct array emits exactly the same multiset from a single
-    * pass. Shared by [[dedupGroups]], [[foldClosure]] and the semantic
-    * family ([[SimilarityOps.dedupSemantic]]).
+    * pass.
     */
-  private[graft] def bothDirections(pairs: DataFrame): DataFrame =
+  private def bothDirections(pairs: DataFrame): DataFrame =
     pairs.select(explode(array(
         struct(col("id1"), col("id2")),
         struct(col("id2").as("id1"), col("id1").as("id2")))).as("e"))
       .select(col("e.id1").as("id1"), col("e.id2").as("id2"))
+
+  /** The closure step shared by [[dedupGroups]], [[foldClosure]] and
+    * [[SimilarityOps.dedupSemantic]]: pin both directions of the
+    * undirected `pairs` as the edge list, run [[propagateMin]] over it,
+    * release the edges, and return the (doc_id, component) labels.
+    *
+    * The edge pin is eager: a localCheckpoint, not a persist — the
+    * loop joins the edges every round, and with a persist the cached
+    * plan still carries the pair generator's lineage, whose swinging
+    * AQE stat estimates flipped the loop's join strategies (measured
+    * 2x regression switching generators). With `checkpointDir` set
+    * the edges go to RELIABLE storage instead, so executor loss cannot
+    * strand the whole loop's input (VERDICT r5 #8). `pairs` is by-name
+    * and is built inside the pin's scope, so every cache the pair
+    * generator registers is released once the edges are pinned,
+    * before round 1 — nothing downstream re-reads them.
+    */
+  private[operators] def closure(pairs: => DataFrame, maxIters: Int = 50,
+      checkpointDir: Option[String] = None,
+      reliableEvery: Int = 10): DataFrame = {
+    val edges = graft.CacheRegistry.scoped(
+      pinReliable(bothDirections(pairs), checkpointDir))
+    val labels = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
+    graft.CacheRegistry.releaseCheckpoint(edges)
+    labels
+  }
 
   /** Run two independent EAGER operator pipelines from two driver
     * threads and return both results (r15, guide §2.6): Spark's
@@ -914,15 +921,19 @@ object DedupOps {
     * sequentially. `b` runs on a throwaway thread while `a` runs on
     * the caller's; tiny jobs from each chain back-fill the other's
     * idle cores. Safe for graft operators by construction:
-    * CacheRegistry is synchronized and mark/releaseSince are
-    * thread-scoped, the bridge checkpoint helpers keep no cross-call
-    * state, and job descriptions/groups are thread-local. A failure on
-    * either side cancels the other and rethrows the original cause.
+    * CacheRegistry is synchronized, the bridge checkpoint helpers keep
+    * no cross-call state, and job descriptions/groups are thread-local.
+    * `b` registers its pins in the CacheRegistry scope the caller had
+    * open when it called, so a scope `a` opens never releases them: a
+    * by-name prior evaluated as `b` survives the pair-pin scope of `a`.
+    * A failure on either side cancels the other and rethrows the
+    * original cause.
     */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    val runB = graft.CacheRegistry.inCallerScope(b)
     val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      override def call(): B = b
+      override def call(): B = runB()
     })
     val ra =
       try a
@@ -988,7 +999,7 @@ object DedupOps {
     * dedupIncremental / foldClosure): a 0-round budget has no
     * identity-labels degenerate form since the r14 first-round fusion.
     */
-  private[operators] def propagateMin(edges: DataFrame, maxIters: Int,
+  private def propagateMin(edges: DataFrame, maxIters: Int,
       checkpointDir: Option[String] = None,
       reliableEvery: Int = 10): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -1116,6 +1127,8 @@ object DedupOps {
     * connectivity (prior components are already complete), and min
     * over collapsed node ids = min doc_id of the merged component
     * because each prior canonical IS its component's min.
+    *
+    * Requires `maxIters >= 1`, as [[dedupGroups]] does.
     */
   def dedupIncremental(corpus: DataFrame, priorLabels: => DataFrame,
       batch: DataFrame, minJaccard: Double = 0.7,
@@ -1123,7 +1136,6 @@ object DedupOps {
       reliableEvery: Int = 10): DataFrame = {
     val cols = Seq("doc_id", "source", "text").map(col)
     val union = corpus.select(cols: _*).unionByName(batch.select(cols: _*))
-    val cacheMark = graft.CacheRegistry.mark()
     // r15 (guide §2.6): `priorLabels` is BY-NAME — callers typically
     // pass the standing corpus's dedupGroups closure, an eager job
     // chain fully independent of the batch-probe pair generation. The
@@ -1132,17 +1144,15 @@ object DedupOps {
     // max(prior, pair-gen) instead of their sum. The raw pin is new
     // (pairs used to stay lazy until foldClosure's collapsed-edges
     // pin) but costs one pass over 2-long rows, and it is also what
-    // lets pair-generation caches release before the closure starts.
-    val (pinnedPairs, prior) = inParallel({
-      val p = pinReliable(ngramJaccardPrefixAgainst(union,
+    // lets pair-generation caches release, with this pin's scope,
+    // before the closure starts.
+    val (pinnedPairs, prior) = inParallel(
+      graft.CacheRegistry.scoped(pinReliable(ngramJaccardPrefixAgainst(union,
         batch.select("doc_id"), minJaccard).select("id1", "id2"),
-        checkpointDir)
-      graft.CacheRegistry.releaseSince(cacheMark)
-      p
-    }, priorLabels)
+        checkpointDir)),
+      priorLabels)
     foldClosure(union.select(col("doc_id")), prior, pinnedPairs,
-      maxIters, checkpointDir, reliableEvery,
-      afterEdgesPinned = () => graft.CacheRegistry.releaseCheckpoint(pinnedPairs))
+      maxIters, checkpointDir, reliableEvery)
   }
 
   /** The collapsed-closure FOLD kernel shared by [[dedupIncremental]]
@@ -1151,30 +1161,27 @@ object DedupOps {
     * ids, the prior labels, and batch-touching pairs, collapse edge
     * endpoints to prior-component nodes, propagate min labels over the
     * collapsed graph, and fan the new labels back out to members.
-    * `afterEdgesPinned` runs once the edge list is eagerly pinned —
-    * the caller's hook for releasing pair-generation caches.
+    * A checkpointed `pairs` (the callers pin theirs) is released once
+    * the collapsed edge list is pinned, before round 1.
     */
   private[operators] def foldClosure(unionIds: DataFrame,
       priorLabels: DataFrame, pairs: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None, reliableEvery: Int = 10,
-      afterEdgesPinned: () => Unit = () => ()): DataFrame = {
+      checkpointDir: Option[String] = None,
+      reliableEvery: Int = 10): DataFrame = {
     val rep = priorLabels.select(col("doc_id"), col("component").as("rep"))
-    // collapse endpoints to prior-component nodes; drop intra-component
-    // pairs (already merged), then make the edge list bidirectional
-    val e0 = pairs
-      .join(rep.select(col("doc_id").as("id1"), col("rep").as("r1")),
-        Seq("id1"), "left")
-      .join(rep.select(col("doc_id").as("id2"), col("rep").as("r2")),
-        Seq("id2"), "left")
-      .select(coalesce(col("r1"), col("id1")).as("id1"),
-        coalesce(col("r2"), col("id2")).as("id2"))
-      .filter(col("id1") =!= col("id2"))
-    // r15: one-evaluation bidirectional edges (see bothDirections) —
-    // the union shape re-ran the whole probe join + collapse per branch
-    val edges = pinReliable(bothDirections(e0), checkpointDir)
-    afterEdgesPinned()
-    val moved = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
-    graft.CacheRegistry.releaseCheckpoint(edges)
+    // collapse endpoints to prior-component nodes and drop
+    // intra-component pairs (already merged); registering `pairs` in
+    // the closure's pin scope releases it as soon as the edges are pinned
+    val moved = closure(
+      graft.CacheRegistry.registerCheckpoint(pairs)
+        .join(rep.select(col("doc_id").as("id1"), col("rep").as("r1")),
+          Seq("id1"), "left")
+        .join(rep.select(col("doc_id").as("id2"), col("rep").as("r2")),
+          Seq("id2"), "left")
+        .select(coalesce(col("r1"), col("id1")).as("id1"),
+          coalesce(col("r2"), col("id2")).as("id2"))
+        .filter(col("id1") =!= col("id2")),
+      maxIters, checkpointDir, reliableEvery)
     // fan out: doc → its collapsed node → the node's new label (nodes
     // untouched by any new edge keep their prior component)
     val nodes = unionIds

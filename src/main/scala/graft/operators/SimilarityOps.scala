@@ -1402,18 +1402,12 @@ object SimilarityOps {
   def dedupSemantic(embeddings: DataFrame, minCosine: Double = 0.4,
       maxExactRows: Long = 100000L,
       candidates: Option[DataFrame] = None): DataFrame = {
-    val pairs = candidates.getOrElse(
-      embeddingNearDups(embeddings, minCosine, maxExactRows)
-        .select(col("id1"), col("id2")))
+    val labels = DedupOps.closure(candidates.getOrElse(
+        embeddingNearDups(embeddings, minCosine, maxExactRows)
+          .select(col("id1"), col("id2"))))
+      .withColumnRenamed("doc_id", "vec_id")
     // r14: sizes from the labels leaf instead of a second corpus pass;
     // see dedupGroups for the equivalence note
-    // r15 (guide §1.2): bothDirections — ONE evaluation of the pair
-    // scorer instead of the union shape's two (see DedupOps note)
-    val edges = DedupOps.bothDirections(pairs)
-      .localCheckpoint(true)
-    val labels = DedupOps.propagateMin(edges, 50, None, 10)
-      .withColumnRenamed("doc_id", "vec_id")
-    graft.CacheRegistry.releaseCheckpoint(edges)
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("n_members"))
     embeddings.select(col("vec_id"))
       .join(labels, Seq("vec_id"), "left")
@@ -1560,8 +1554,8 @@ object SimilarityOps {
     // r15 (guide §2.6): same overlap as the lexical fold — the
     // (by-name) prior closure evaluates on a second driver thread
     // while this one materializes the batch-probe pairs; the raw pin
-    // costs one pass over 2-long rows and its blocks release once the
-    // collapsed edge list is pinned.
+    // costs one pass over 2-long rows and foldClosure releases it once
+    // the collapsed edge list is pinned.
     val (pinnedPairs, prior) = DedupOps.inParallel(
       candidates.getOrElse(
         embeddingNearDupsAgainst(union, batch.select("vec_id"), minCosine,
@@ -1570,8 +1564,7 @@ object SimilarityOps {
     val out = DedupOps.foldClosure(
       union.select(col("vec_id").as("doc_id")),
       prior.select(col("vec_id").as("doc_id"), col("component")),
-      pinnedPairs,
-      afterEdgesPinned = () => graft.CacheRegistry.releaseCheckpoint(pinnedPairs))
+      pinnedPairs)
     out.withColumnRenamed("doc_id", "vec_id")
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 import scala.util.control.NonFatal
+import graft.CacheRegistry
 import graft.functions.VectorFns
 import graft.operators.{AnalyticsOps, DedupOps, SimilarityOps, TextOps}
 import graft.sources.Schemas.Event
@@ -161,7 +162,7 @@ object StreamOps {
     // pin the final label table into executor blocks, then delete the
     // temp workspace (r15, VERDICT r14 #4) — the returned frame must
     // not lazily reference files this cleanup removes
-    val out = graft.CacheRegistry.registerCheckpoint(
+    val out = CacheRegistry.registerCheckpoint(
       org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
         spark.read.parquet(s"$base/labels")
           .select("doc_id", "component", "n_members", "is_canonical")))
@@ -289,6 +290,8 @@ object StreamOps {
     * reference's month-skip idempotent backfill
     * (flows/download_era5_land.py:81), carried through the clustering
     * transform. Paths may be any Hadoop path, as for [[snapshotFold]].
+    * Each batch runs in its own CacheRegistry scope, which releases the
+    * batch pin and every pin the kernels register, and nothing else.
     */
   private def labelFold(input: DataFrame, cols: Seq[String], corpusDir: String,
       labelsDir: String)(first: DataFrame => DataFrame,
@@ -297,12 +300,12 @@ object StreamOps {
     input.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // snapshot: a foreachBatch frame is only valid inside this
-        // call, and the labels written below must not reference the
-        // labelsDir files they are about to replace
-        val b = batch.select(cols.map(col): _*).localCheckpoint(true)
-        try {
+        CacheRegistry.scoped {
+          val spark = batch.sparkSession
+          // snapshot: a foreachBatch frame is only valid inside this
+          // call, and the labels written below must not reference the
+          // labelsDir files they are about to replace
+          val b = pin(batch.select(cols.map(col): _*))
           val labels =
             if (!pathExists(spark, labelsDir)) first(b)
             else {
@@ -313,16 +316,12 @@ object StreamOps {
                     .filter(col("batch") < lit(id)).select(cols.map(col): _*)
                 else b.filter(lit(false)) // crash-window replay: no corpus yet
               val out = incremental(corpus, prior, b).localCheckpoint(true)
-              release(prior)
+              CacheRegistry.releaseCheckpoint(prior)
               out
             }
           labels.write.mode("overwrite").parquet(labelsDir)
-          release(labels)
+          CacheRegistry.releaseCheckpoint(labels)
           b.write.mode("overwrite").parquet(s"$corpusDir/batch=$id")
-        } finally {
-          release(b)
-          // ROADMAP open item 1: the dedup kernels register pins this fold has no handle to
-          graft.CacheRegistry.unpersistAll()
         }
       }
 
@@ -343,8 +342,9 @@ object StreamOps {
     *    dirs carry nothing the newest does not. `retainBatches` ≥ 2 is
     *    enforced: Structured Streaming replays at most the last
     *    uncommitted batch, whose prior is snapshot id − 1;
-    *  - only the batch and prior pins are released; caches other
-    *    operators hold in the session are left alone;
+    *  - the batch runs in its own CacheRegistry scope, which releases
+    *    the batch and prior pins (and any pin `merge` registers) and
+    *    leaves caches other operators hold in the session alone;
     *  - `stateDir` may be any Hadoop path (local, `file:`, HDFS, an
     *    object store): exists, list and delete go through its own
     *    FileSystem.
@@ -358,20 +358,17 @@ object StreamOps {
         require(retainBatches >= 2,
           s"snapshotFold: retainBatches must be >= 2 to preserve the " +
             s"latest-prior crash-replay read (got $retainBatches)")
-        val spark = batch.sparkSession
-        val b = batch.select(cols.map(col): _*).localCheckpoint(true)
-        try {
-          val prior = latestSnapshot(spark, stateDir, before = id)
-            .map(_.localCheckpoint(true))
-          try {
-            merge(b, prior).write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-            val fs = hadoopFs(spark, stateDir)
-            fs.listStatus(new Path(stateDir)).map(_.getPath).filter { p =>
-              p.getName.startsWith("batch=") && p.getName.stripPrefix("batch=")
-                .toLongOption.exists(_ <= id - retainBatches)
-            }.foreach(p => try fs.delete(p, true) catch { case NonFatal(_) => () })
-          } finally prior.foreach(release)
-        } finally release(b)
+        CacheRegistry.scoped {
+          val spark = batch.sparkSession
+          val b = pin(batch.select(cols.map(col): _*))
+          val prior = latestSnapshot(spark, stateDir, before = id).map(pin)
+          merge(b, prior).write.mode("overwrite").parquet(s"$stateDir/batch=$id")
+          val fs = hadoopFs(spark, stateDir)
+          fs.listStatus(new Path(stateDir)).map(_.getPath).filter { p =>
+            p.getName.startsWith("batch=") && p.getName.stripPrefix("batch=")
+              .toLongOption.exists(_ <= id - retainBatches)
+          }.foreach(p => try fs.delete(p, true) catch { case NonFatal(_) => () })
+        }
       }
 
   /** The newest `batch=<id>` snapshot under `dir` with id < `before`,
@@ -409,10 +406,9 @@ object StreamOps {
       }: _*)
   }
 
-  /** Drop a localCheckpoint pin now instead of whenever GC notices it. */
-  private def release(df: DataFrame): Unit =
-    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-      .foreach(r => try r.unpersist(false) catch { case NonFatal(_) => () })
+  /** Eagerly checkpoint `df`, released with the open CacheRegistry scope. */
+  private def pin(df: DataFrame): DataFrame =
+    CacheRegistry.registerCheckpoint(df.localCheckpoint(true))
 
   private def hadoopFs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

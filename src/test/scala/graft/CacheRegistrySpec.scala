@@ -72,33 +72,106 @@ class CacheRegistrySpec extends SparkSpec {
     bridge.checkpointRdd(ck).foreach(_.unpersist(true))
   }
 
-  test("mark/releaseSince are thread-scoped; unpersistAll stays global") {
-    // r15 (guide §2.6): operators overlap independent eager pipelines
-    // on two driver threads (the incremental folds); a releaseSince
-    // scoped globally would unpersist the sibling thread's still-hot
-    // caches mid-flight. The calling thread releases only its own
-    // registrations past its own mark.
+  test("scoped releases only its own thread's pins; unpersistAll stays global") {
+    // operators overlap independent eager pipelines on two driver
+    // threads (the incremental folds); a scope must not unpersist a
+    // sibling thread's still-hot caches, nor anything registered
+    // before it opened.
     CacheRegistry.unpersistAll(blocking = true)
     val mine = CacheRegistry.persist(spark.range(10).toDF("a"))
-    val m = CacheRegistry.mark() // = 1 on this thread
     val theirsHolder = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.DataFrame]()
-    val t = new Thread(() => {
-      theirsHolder.set(CacheRegistry.persist(spark.range(20).toDF("b")))
-    })
-    t.start(); t.join()
-    val mine2 = CacheRegistry.persist(spark.range(30).toDF("c"))
-    CacheRegistry.releaseSince(m, blocking = true)
+    val mine2 = CacheRegistry.scoped {
+      val t = new Thread(() => {
+        theirsHolder.set(CacheRegistry.persist(spark.range(20).toDF("b")))
+      })
+      t.start(); t.join()
+      CacheRegistry.persist(spark.range(30).toDF("c"))
+    }
     val none = org.apache.spark.storage.StorageLevel.NONE
-    assert(mine.storageLevel !== none, "pre-mark own frame must survive")
+    assert(mine.storageLevel !== none, "a frame registered before the scope must survive")
     assert(theirsHolder.get().storageLevel !== none,
-      "another thread's frame must survive this thread's releaseSince")
+      "another thread's frame must survive this thread's scope")
     assert(mine2.storageLevel === none,
-      "own post-mark frame must be released")
+      "own in-scope frame must be released")
     CacheRegistry.unpersistAll(blocking = true)
     assert(theirsHolder.get().storageLevel === none &&
       mine.storageLevel === none,
       "unpersistAll must release every thread's registrations")
+  }
+
+  test("scoped releases its pins when the body throws") {
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    var inside: org.apache.spark.sql.DataFrame = null
+    val ex = intercept[IllegalStateException] {
+      CacheRegistry.scoped {
+        inside = CacheRegistry.persist(spark.range(40).toDF("d"))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(ex.getMessage === "boom")
+    assert(inside.storageLevel === none,
+      "a throwing body must still release its pins")
+  }
+
+  test("an inParallel second-branch pin survives a scope opened on the first branch") {
+    // dedupIncremental's shape: the first branch pins pairs inside a
+    // scope while the second evaluates the by-name prior; the prior's
+    // pins belong to the caller's scope, not to the first branch's
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    val registered = new java.util.concurrent.CountDownLatch(1)
+    val prior = CacheRegistry.scoped {
+      val (inner, prior) = graft.operators.DedupOps.inParallel(
+        CacheRegistry.scoped {
+          val p = CacheRegistry.persist(spark.range(50).toDF("e"))
+          // close this scope only after the second branch has registered
+          assert(registered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          p
+        }, {
+          val p = CacheRegistry.persist(spark.range(60).toDF("f"))
+          registered.countDown()
+          p
+        })
+      assert(inner.storageLevel === none,
+        "the first branch's scope must release its own pin")
+      assert(prior.storageLevel !== none,
+        "the second branch's pin must survive the first branch's scope")
+      prior
+    }
+    assert(prior.storageLevel === none,
+      "the second branch registers in the scope its caller had open")
+  }
+
+  test("a pin registered after its scope closed goes to the root list") {
+    // inParallel does not wait for an abandoned second branch when the
+    // first one throws, so that branch can register into the caller's
+    // scope after it has been released; the pin must not be lost there
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    val go = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val late = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.DataFrame]()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    intercept[IllegalStateException] {
+      CacheRegistry.scoped {
+        graft.operators.DedupOps.inParallel({
+            started.await() // a queued second branch would never run
+            throw new IllegalStateException("first branch fails")
+          }, {
+            started.countDown()
+            while (!go.get) Thread.onSpinWait()
+            Thread.interrupted() // clear the cancel's interrupt
+            late.set(CacheRegistry.persist(spark.range(70).toDF("g")))
+            done.countDown()
+          })
+      }
+    }
+    go.set(true)
+    assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    assert(late.get().storageLevel !== none)
+    CacheRegistry.unpersistAll(blocking = true)
+    assert(late.get().storageLevel === none,
+      "a late registration must be released by the root sweep")
   }
 
   test("inParallel returns both results and rethrows the async cause") {

@@ -800,23 +800,82 @@ class StreamOpsSpec extends SparkSpec {
     CacheRegistry.unpersistAll()
   }
 
-  /** A monitor releases only the batch and prior snapshot it pinned:
-    * pins another operator registered in the same session survive.
+  /** A streaming fold releases only the pins of its own batch scope:
+    * pins another operator registered in the same session survive a
+    * monitor batch and a D11 or D23 dedup fold batch alike.
     */
   test("a monitor batch leaves results held elsewhere in the session readable") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.sources.Tables.documents(spark, sf)
     val held = graft.operators.DedupOps.dedupGroups(docs)
-    val base = java.nio.file.Files.createTempDirectory("fold_scope").toString
-    val stream = MemoryStream[Event]
-    val q = StreamOps.streamingKruskal(stream.toDF(), s"$base/state")
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    stream.addData(driftBatch(0))
-    q.processAllAvailable()
-    q.stop()
-    assert(held.count() === docs.count())
+    val n = docs.count()
+    def drainTwoBatches[T: org.apache.spark.sql.Encoder](rows: Seq[T])(
+        fold: (org.apache.spark.sql.DataFrame, String) =>
+          org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+        : Unit = {
+      val base = java.nio.file.Files.createTempDirectory("fold_scope").toString
+      val stream = MemoryStream[T]
+      val q = fold(stream.toDF(), base)
+        .option("checkpointLocation", s"$base/ckpt")
+        .start()
+      rows.grouped((rows.size + 1) / 2).foreach { g =>
+        stream.addData(g); q.processAllAvailable()
+      }
+      q.stop()
+      assert(held.count() === n)
+    }
+    drainTwoBatches(driftBatch(0))((in, base) =>
+      StreamOps.streamingKruskal(in, s"$base/state"))
+    drainTwoBatches(docs.as[graft.sources.Schemas.Document].collect().toSeq)(
+      (in, base) => StreamOps.streamingDedupIncremental(in, s"$base/corpus",
+        s"$base/labels"))
+    drainTwoBatches(graft.sources.Tables.embeddings(spark, sf)
+        .as[graft.sources.Schemas.Embedding].collect().toSeq)(
+      (in, base) => StreamOps.streamingDedupSemantic(in, s"$base/corpus",
+        s"$base/labels"))
+    CacheRegistry.unpersistAll()
+  }
+
+  /** The concurrent form of the test above: a reader thread keeps
+    * counting a held dedupGroups result while a D11 fold drains three
+    * batches on the stream thread, and no read fails.
+    */
+  test("a held dedup result stays readable while a dedup fold drains concurrently") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val held = graft.operators.DedupOps.dedupGroups(docs)
+    val n = docs.count()
+    val rows = docs.as[graft.sources.Schemas.Document].collect()
+      .sortBy(_.doc_id).toSeq
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val firstRead = new java.util.concurrent.CountDownLatch(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reader = new Thread(() =>
+      try {
+        while (!stop.get) {
+          val c = held.count()
+          if (c != n) throw new IllegalStateException(s"held count $c != $n")
+          firstRead.countDown()
+        }
+      } catch { case t: Throwable => failure.set(t); firstRead.countDown() })
+    reader.start()
+    try {
+      assert(firstRead.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      val base = java.nio.file.Files.createTempDirectory("fold_concurrent").toString
+      val stream = MemoryStream[graft.sources.Schemas.Document]
+      val q = StreamOps.streamingDedupIncremental(stream.toDF(),
+          s"$base/corpus", s"$base/labels")
+        .option("checkpointLocation", s"$base/ckpt")
+        .start()
+      rows.grouped((rows.size + 2) / 3).foreach { g =>
+        stream.addData(g); q.processAllAvailable()
+      }
+      q.stop()
+    } finally { stop.set(true); reader.join() }
+    assert(failure.get() === null, s"a held read failed: ${failure.get()}")
+    assert(held.count() === n)
     CacheRegistry.unpersistAll()
   }
 
