@@ -10,44 +10,51 @@ import scala.util.control.NonFatal
   * timed cold-cache passes (a single pass on a noisy shared host
   * charged round 1 twenty seconds for a query that runs in 0.77 s) —
   * except entries whose first timed pass exceeds HeavyCutSec, which
-  * stand on min(warmup wall, first-pass wall) so the suite fits the
-  * driver's round budget (r13; see the pass-dial note in main) —
-  * plus per-query stage-time attribution (executor run time, ms) so
+  * stand on min(warmup wall, first-pass wall) so the whole surface fits
+  * a bounded run (see the pass-dial note in main) — plus
+  * per-query stage-time attribution (executor run time, ms) so
   * wall-clock noise from the host is distinguishable from real work.
   *
-  * Heap hygiene (VERDICT r3 #3): a 100-query run in one JVM
-  * accumulates heap state, and an allocation-heavy plan late in the
-  * run can drown in GC caused by everything before it — r3's driver
-  * run charged two queries 38 s that ran in 1 s isolated. So the
-  * bench now (a) forces a full GC between queries, putting every
-  * query at the same heap baseline; (b) records per-query GC time and
-  * retained-heap delta (ManagementFactory beans) into the JSON, so a
-  * wall regression is attributable to GC vs real work from the
-  * artifact alone; (c) offers SPARK_GRAFT_BENCH_FORK=1 — each query
-  * in a fresh child JVM (classpath = /opt/spark/jars + compiled
-  * classes) for fully isolated attribution runs, and
-  * SPARK_GRAFT_BENCH_ONLY=a,b,c to subset.
+  * Heap hygiene: a 200-query run in one JVM accumulates heap state,
+  * and an allocation-heavy plan late in the run can drown in GC caused
+  * by everything before it. So the bench (a) forces a full GC before
+  * every timed pass, putting every query at the same heap baseline;
+  * (b) records per-query GC time and retained-heap delta
+  * (ManagementFactory beans) into the JSON, so a wall regression is
+  * attributable to GC vs real work from the artifact alone.
+  * SPARK_GRAFT_BENCH_ONLY=a,b,c runs a subset; one name runs that
+  * entry alone in its own JVM, the per-process isolated wall.
   */
 object Bench {
-  // r11: large-SF runs override pass count (warmup + 1 timed pass) —
-  // at 10x the corpus the heavy families cost minutes per pass, and
-  // the artifact's job there is RATIO-CLASS evidence, not
-  // noise-floor medians (which the sf0.1 artifact already carries).
-  // The emitted JSON records `passes`, so the artifact self-describes.
-  // Validated lazily (ADVICE r11): a bare .toInt in object init would
-  // surface as an opaque ExceptionInInitializerError, and 0/negative
-  // would make median(Nil) fail mid-run instead of failing here.
+  // Large-SF runs override the pass count (warmup + 1 timed pass): at
+  // 10x the corpus the heavy families cost minutes per pass, and the
+  // artifact's job there is ratio-class evidence, not noise-floor
+  // medians. The emitted JSON records `passes`, so the artifact
+  // self-describes. Validated lazily and parse-then-require: a bare
+  // .toInt in object init would surface as an opaque
+  // ExceptionInInitializerError, and 0/negative would make median(Nil)
+  // fail mid-run instead of failing here.
   private lazy val TimedPasses =
     sys.env.get("SPARK_GRAFT_BENCH_PASSES") match {
       case None => 3
       case Some(v) =>
-        // parse-then-require (ADVICE r13 #4): an int that overflows the
-        // regex check (e.g. "99999999999") must hit the friendly message
         val parsed = scala.util.Try(v.toInt).toOption
         require(parsed.exists(_ >= 1),
           s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$v'")
         parsed.get
     }
+
+  // An entry whose first timed pass takes this long runs no further
+  // passes: a 2.5 s wall is ~5x the host's noise floor the extra passes
+  // exist to reject, and bench_ratio.py flags every pass-regime flip so
+  // cross-round stats stay comparable.
+  private val HeavyCutSec = 2.5
+  // Past this many seconds from JVM start the remaining queries are
+  // recorded as `deferred` and the artifact finalizes with rc=0: a
+  // bounded-but-parsed artifact beats a timeout tail. 27.5 min stays
+  // under a ~40 min wall-clock kill of the whole run, with margin for
+  // sbt/startup ahead.
+  private val DeadlineSec = 1650.0
 
   private def gcMsNow(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -62,60 +69,6 @@ object Bench {
   private def jsonSanitize(s: String): String =
     s.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
 
-  // r13 (VERDICT r12 #1): the driver's r12 bench hit its wall-clock
-  // kill (rc=124) — the suite grew 44% in two rounds and warmup+3
-  // passes of everything no longer fits the round budget. Three
-  // changes keep the artifact DRIVER-CERTIFIABLE as the surface grows:
-  // (a) a per-entry pass dial — a query whose WARMUP pass already
-  //     costs >= HeavyCutSec runs ONE timed pass instead of three
-  //     (the sf1 `passes` precedent: a 10-18 s certification gate's
-  //     job is ratio-class evidence, not noise-floor medians, and its
-  //     wall is far above the noise floor anyway); per-entry pass
-  //     counts land in the JSON (`passes_q`) so the artifact
-  //     self-describes;
-  // (b) a DEADLINE — when elapsed wall crosses it, remaining queries
-  //     are recorded as `deferred` and the artifact finalizes with
-  //     rc=0: a bounded-but-parsed artifact beats a timeout tail;
-  // (c) incremental emission — each finished query appends one JSONL
-  //     line to <out>.progress.jsonl and the main artifact is written
-  //     BEFORE the fork pass too, so even a hard kill mid-run leaves
-  //     per-query walls on disk instead of rc=124 + WARN spam.
-  // ADVICE r13 #4: parse-then-require instead of a permissive regex —
-  // "1.2.3" or "." passed "[0-9.]+" and then blew up inside toDouble,
-  // bypassing the descriptive message this validation exists for.
-  private def posDoubleEnv(key: String, default: => Double): Double =
-    sys.env.get(key) match {
-      case None => default
-      case Some(v) =>
-        val parsed = scala.util.Try(v.toDouble).toOption
-        require(parsed.exists(d => d > 0 && !d.isNaN && !d.isInfinite),
-          s"$key must be a positive number, got '$v'")
-        parsed.get
-    }
-  // r14: cut lowered 4.0 -> 2.5 to fund the two new streaming gate
-  // entries inside the same main-loop deadline: the 14 entries in the
-  // [2.5, 4) band collapse to min(warmup, t1), saving ~86 s of timed
-  // passes (r13 artifact accounting); a 2.5 s wall is still ~5x the
-  // host's noise floor, and bench_ratio.py flags every pass-regime
-  // flip so cross-round stats stay comparable.
-  private lazy val HeavyCutSec =
-    posDoubleEnv("SPARK_GRAFT_BENCH_HEAVY_SEC", 2.5)
-  // 27.5 min from JVM start — under the ~40 min driver kill that took
-  // r12, with margin for sbt/startup ahead
-  private lazy val DeadlineSec =
-    posDoubleEnv("SPARK_GRAFT_BENCH_DEADLINE_SEC", 1650.0)
-  // ADVICE r13 #2: the fork pass previously shared the main loop's
-  // deadline with no reserved budget, so a main loop that consumed the
-  // whole budget dropped the per-process attribution evidence entirely
-  // (r13: 7 of 10 fork children deferred committed, 10 of 10 on the
-  // driver). The fork loop now has its OWN deadline — by default 7
-  // minutes past the main one — so the roster's children always get
-  // wall-clock even when the timed loop runs to its limit. Worst-case
-  // total (main 1650 s + fork 420 s = 34.5 min) stays under the ~40
-  // min driver kill.
-  private lazy val ForkDeadlineSec =
-    posDoubleEnv("SPARK_GRAFT_BENCH_FORK_DEADLINE_SEC", DeadlineSec + 420.0)
-
   /** Serving entries measure the OPPOSITE contract from every other
     * query: data served from an in-memory mart registered once per
     * JVM (MartServing), so their timed passes must HIT the cache the
@@ -127,21 +80,25 @@ object Bench {
   private val ServingQueries = Set("serving_keys", "serving_range",
     "serving_wide", "serving_kpi")
 
+  /** One entry's published figures: wall (s), executor stage time,
+    * GC time (ms) and retained-heap delta (MB).
+    */
+  private[graft] case class Timing(wall: Double, stageMs: Double,
+      gcMs: Double, heapDeltaMb: Double)
+
   def main(args: Array[String]): Unit = {
-    if (sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("1")) { forkMain(); return }
     val runT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - runT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = Harness.envList("SPARK_GRAFT_BENCH_ONLY")
-    // r11: SKIP list for large-SF runs — the quarantined exact O(n²)
-    // AUDIT queries (knn_brute, dedup_embedding, the *_recall gates
-    // that embed a brute-force truth, the signature-calibration pair
-    // joins). Their quadratic growth is by design and guard-documented
-    // (compare sf0.1 vs MakeScaled ×10 with bench_ratio.py to measure
-    // it); at 10× corpus they would dominate the
-    // artifact without saying anything about the production paths.
-    // A skipped name is recorded in the JSON so the artifact is
-    // self-describing, never silently truncated.
+    // SKIP list for large-SF runs — the quarantined exact O(n²) AUDIT
+    // queries (knn_brute, dedup_embedding, the *_recall gates that embed
+    // a brute-force truth, the signature-calibration pair joins). Their
+    // quadratic growth is by design and guard-documented (compare sf0.1
+    // vs MakeScaled ×10 with bench_ratio.py to measure it); at 10×
+    // corpus they would dominate the artifact without saying anything
+    // about the production paths. A skipped name is recorded in the
+    // JSON so the artifact is self-describing, never silently truncated.
     val skip = Harness.envList("SPARK_GRAFT_BENCH_SKIP").toSet
     val selected = Harness.select(only).filter { case (n, _) => !skip(n) }
     val spark = Harness.session()
@@ -168,17 +125,19 @@ object Bench {
     // the actual projection work while still writing nothing.
     // A failure is RECORDED, never swallowed: a query that fails to
     // plan would otherwise time as ~0 and pollute the medians.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[String] =
+    def run(fn: Harness.Query): Option[String] =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-      catch { case t: Throwable =>
+      catch { case NonFatal(t) =>
         Some(t.getClass.getSimpleName + ": " +
           jsonSanitize(Option(t.getMessage).getOrElse("")))
       }
 
-    val subset = only.nonEmpty
+    // Subset runs default to a DIFFERENT file, so a debugging subset
+    // never clobbers the full-run artifact.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (subset) "BENCH_subset.json" else "BENCH_full.json")
-    // incremental per-query record: survives any kill (VERDICT r12 #1b)
+      if (only.nonEmpty) "BENCH_subset.json" else "BENCH_full.json")
+    // one JSONL line per finished query: a kill mid-run still leaves
+    // per-query walls on disk
     val progressPath = java.nio.file.Paths.get(outFile + ".progress.jsonl")
     java.nio.file.Files.deleteIfExists(progressPath)
     def appendProgress(line: String): Unit =
@@ -187,15 +146,13 @@ object Bench {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
 
-    // (wall s, stage ms, gc ms, retained-heap delta MB)
-    val timings = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Double, Double)]
+    val timings = scala.collection.mutable.LinkedHashMap.empty[String, Timing]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val passesQ = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val deferred = scala.collection.mutable.ListBuffer.empty[String]
     selected.foreach { case (name, fn) =>
-        if (elapsedSec > DeadlineSec) { deferred += name }
-        else {
+      if (elapsedSec > DeadlineSec) deferred += name
+      else {
         val serving = ServingQueries.contains(name)
         // warmup pass: compiles generated code and JITs kernels (one-time
         // per-JVM costs, not engine throughput); caches dropped after so
@@ -210,28 +167,10 @@ object Bench {
             errors(name) = err
             appendProgress(s"""{"q":"$name","error":"$err"}""")
           case None =>
-            // the pass dial decides off the FIRST TIMED pass, not the
-            // warmup (a JVM-cold warmup charges one-time codegen/JIT
-            // costs to whichever query runs first): a pass already
-            // past HeavyCutSec is far above the noise floor the extra
-            // passes exist to reject, so it stands alone — except its
-            // WALL is published as min(warmup, pass): this host shows
-            // minutes-long contention windows that inflate
-            // shuffle-heavy walls 2-3x (r10's knn_graph band, r12's
-            // dedup_groups 14.9 vs fork 7.6), and a spike must hit
-            // BOTH samples to survive a min. Codegen bias in the
-            // warmup is ~0.3-0.5 s — noise at this magnitude. stage/
-            // gc/heap stay from the timed pass (the attributable one).
-            // tuple: (wall s, stage ms, gc ms, heap delta MB, heap
-            // baseline MB) — the baseline rides along so a pass that
-            // turns out RETROACTIVELY to be the last (the heavy dial
-            // collapsing nPasses to 1) can still get a real delta.
-            def onePass(last: Boolean): (Double, Double, Double, Double, Double) = {
-              // settle the heap first: every query starts from the same
-              // baseline instead of inheriting the previous 40 queries'
-              // garbage (the r3 bimodality); the retained-heap delta is
-              // measured on the LAST pass only (one settle per pass,
-              // not two — ~100 s across a 200-query run)
+            // (wall s, stage ms, gc ms, settled heap before the pass MB):
+            // settling first puts every pass on the same baseline
+            // instead of inheriting the previous queries' garbage
+            def onePass(): (Double, Double, Double, Double) = {
               val h0 = settledHeapMb()
               val g0 = gcMsNow()
               val s0 = drainedExecMs()
@@ -240,301 +179,102 @@ object Bench {
               val wall = (System.nanoTime() - t0) / 1e9
               val stage = (drainedExecMs() - s0).toDouble
               val gc = (gcMsNow() - g0).toDouble
-              if (!serving || last) clearAll()
-              val dh = if (last) settledHeapMb() - h0 else 0.0
-              (wall, stage, gc, dh, h0)
+              if (!serving) clearAll()
+              (wall, stage, gc, h0)
             }
-            val first0 = onePass(last = TimedPasses == 1)
-            val nPasses =
-              if (first0._1 >= HeavyCutSec) 1 else TimedPasses
-            // ADVICE r13 #1: when the dial collapses an entry to a
-            // single pass, that pass ran with last=false and its heap
-            // delta was hard-coded 0.0 — published indistinguishable
-            // from a measured no-leak. Nothing has run since the pass,
-            // so measure the delta NOW against the pass's own baseline
-            // (serving entries clear their mart cache first, same as a
-            // last pass would have).
-            val first =
-              if (nPasses == 1 && TimedPasses > 1) {
-                if (serving) clearAll()
-                (first0._1, first0._2, first0._3,
-                  settledHeapMb() - first0._5, first0._5)
-              } else first0
-            val passes = first +: (2 to nPasses).map(i =>
-              onePass(last = i == nPasses))
+            // the pass dial decides off the FIRST TIMED pass, not the
+            // warmup (a JVM-cold warmup charges one-time codegen/JIT
+            // costs to whichever query runs first): a pass already
+            // past HeavyCutSec is far above the noise floor the extra
+            // passes exist to reject, so it stands alone — except its
+            // WALL is published as min(warmup, pass): this host shows
+            // minutes-long contention windows that inflate
+            // shuffle-heavy walls 2-3x, and a spike must hit BOTH
+            // samples to survive a min. Codegen bias in the warmup is
+            // ~0.3-0.5 s — noise at this magnitude. stage/gc/heap stay
+            // from the timed pass (the attributable one).
+            val first = onePass()
+            val nPasses = if (first._1 >= HeavyCutSec) 1 else TimedPasses
+            val passes = first +: Seq.fill(nPasses - 1)(onePass())
+            // retained-heap delta of the last pass, against its own
+            // settled baseline, once every cache is dropped
+            if (serving) clearAll()
+            val heapDelta = settledHeapMb() - passes.last._4
             passesQ(name) = nPasses
             if (!errors.contains(name)) {
               val wallStat =
                 if (nPasses == 1) math.min(warmWall, first._1)
                 else median(passes.map(_._1))
-              timings(name) = (wallStat, median(passes.map(_._2)),
-                median(passes.map(_._3)), passes.last._4)
-              val t = timings(name)
-              appendProgress(s"""{"q":"$name","wall":${t._1},"stage_ms":${t._2}""" +
-                s""","gc_ms":${t._3},"heap_mb":${math.rint(t._4)}""" +
+              val t = Timing(wallStat, median(passes.map(_._2)),
+                median(passes.map(_._3)), heapDelta)
+              timings(name) = t
+              appendProgress(s"""{"q":"$name","wall":${t.wall},"stage_ms":${t.stageMs}""" +
+                s""","gc_ms":${t.gcMs},"heap_mb":${math.rint(t.heapDeltaMb)}""" +
                 s""","passes":$nPasses,"warm":$warmWall,"t1":${first._1}}""")
             } else appendProgress(
               s"""{"q":"$name","error":"${errors(name)}"}""")
         }
-        }
       }
+    }
 
     spark.stop()
-    // Emit the main artifact BEFORE the fork pass (VERDICT r12 #1c):
-    // if the process is killed during the forks, the timed loop's
-    // result is already on disk and on stdout.
-    val roster = forkRoster()
-    emit(timings, errors, sfDir, forked = false, subset = subset,
-      skipped = skip, outFile = outFile, passesQ = passesQ,
-      deferred = deferred.toSeq, elapsedSec = elapsedSec,
-      forkRosterNames = roster)
-    // Full runs ALSO fork the dedup-family heavies into fresh child
-    // JVMs (one query per process) and report those walls alongside:
-    // two consecutive rounds the official in-process artifact showed
-    // this family 2-2.5× hotter than the same code on an idle host
-    // (VERDICT r4/r5), and per-process walls are the attribution that
-    // separates host contention from a real plan regression — a
-    // forked wall near the idle-host figure proves the in-process
-    // residue environmental. Opt out with SPARK_GRAFT_BENCH_NOHEAVY=1.
-    // r13: children run warmup + ONE timed pass (their job is a
-    // per-process attribution point, not a median), and the fork loop
-    // respects the deadline — unforked names land in fork_deferred.
-    // r14 (ADVICE r13 #2 + VERDICT r13 #2): the fork loop gets its own
-    // deadline (ForkDeadlineSec, past the main one) and a ROTATING
-    // roster — half the heavy list per round, alternating on the
-    // committed BENCH_r*.json round parity — so every heavy entry gets
-    // a contention-immune isolated wall at least every second round
-    // even when the main loop consumes its full budget.
-    val forkDeferred = scala.collection.mutable.ListBuffer.empty[String]
-    val forkHeavy =
-      if (only.isEmpty && !sys.env.get("SPARK_GRAFT_BENCH_NOHEAVY").contains("1"))
-        roster.filter(SparkEntry.queries.contains).flatMap { n =>
-          if (elapsedSec > ForkDeadlineSec) { forkDeferred += n; None }
-          else Some(n -> forkOne(n, sfDir, passes = 1))
-        }.toMap
-      else Map.empty[String, Either[String, (Double, Double, Double, Double)]]
-    emit(timings, errors, sfDir, forked = false, subset = subset,
-      forkHeavy = forkHeavy, skipped = skip, outFile = outFile,
-      passesQ = passesQ, deferred = deferred.toSeq,
-      forkDeferred = forkDeferred.toSeq, elapsedSec = elapsedSec,
-      forkRosterNames = roster)
-  }
-
-  /** The queries whose in-process walls have disagreed with idle-host
-    * truth under driver load — the near-dup clustering family (all
-    * dominated by the similarity join + label loop).
-    *
-    * r13 TRIM (VERDICT r12 #1): the list had grown to 24 names and
-    * the fork pass alone cost ~10+ min of the driver's budget — a
-    * material share of the rc=124. The default set keeps ONE
-    * representative per contention family (the closure kernel, its
-    * fold, the gram pipeline, the knn/LSH bucket join, the ANN dedup
-    * path, the TPC-H headline); the dropped names (emb_pca pair,
-    * knn_ivfpq pair, q_spearman_approx, simhash/substring variants…)
-    * share those kernels and their historical spreads were resolved
-    * as host contention, with the deep multi-pass attribution runs
-    * available any time via SPARK_GRAFT_BENCH_FORK=1 +
-    * SPARK_GRAFT_BENCH_ONLY.
-    */
-  private val HeavyQueries = Seq(
-    // the closure family (one kernel: posting-list PPJoin + min-label
-    // loop) — the family VERDICT r12 #2 asks to attribute per-process
-    "dedup_groups", "dedup_apply", "dedup_priority", "dedup_weights",
-    "dedup_cluster_stats", "dedup_incremental",
-    // five-stage curation DAG (contains the closure kernel)
-    "pipeline_curate",
-    // knn/LSH bucket join family (r10's 2x in-process band) + the
-    // production ANN semantic-dedup path built on it
-    "knn_graph", "dedup_semantic_ann",
-    // exact-gate semantic dedup — re-listed r14 (VERDICT r13 #1: its
-    // committed wall rose 7.69 -> 11.86 s with the operator untouched
-    // and no fork wall to attribute it; the isolated wall is the
-    // attribution)
-    "dedup_semantic",
-    // r15 (VERDICT r14 #2): the heaviest shuffle on the surface
-    // (~90-130 s stage_ms for a 4-6 s wall) and 1.29x above its r13
-    // wall with the operator untouched — fork attribution decides
-    // drift vs regression
-    "simhash_pair_recall",
-    // TPC-H headline (VERDICT r8 #1 precedent)
-    "q1_pricing")
-
-  /** The round's fork roster (VERDICT r13 #2): by default HALF of
-    * `HeavyQueries`, alternating halves each round so the whole family
-    * gets an isolated wall at least every second round at half the
-    * per-round fork budget (~5-6 children ≈ 4-6 min). The round parity
-    * comes from counting the committed per-round driver artifacts
-    * (BENCH_r<N>.json) in the working directory — deterministic within
-    * a round, flips when the driver lands the next round's artifact.
-    * Override: SPARK_GRAFT_BENCH_FORK_SET=all|even|odd.
-    */
-  private def forkRoster(): Seq[String] = {
-    def half(parity: Int): Seq[String] =
-      HeavyQueries.zipWithIndex.collect {
-        case (n, i) if i % 2 == parity => n }
-    sys.env.get("SPARK_GRAFT_BENCH_FORK_SET") match {
-      case Some("all") => HeavyQueries
-      case Some("even") => half(0)
-      case Some("odd") => half(1)
-      case Some(other) =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_BENCH_FORK_SET must be all|even|odd, got '$other'")
-      case None =>
-        val rounds = Option(new java.io.File(".").list())
-          .getOrElse(Array.empty[String])
-          .count(_.matches("BENCH_r[0-9]+\\.json"))
-        half(rounds % 2)
-    }
-  }
-
-  private def emit(
-      timings: collection.Map[String, (Double, Double, Double, Double)],
-      errors: collection.Map[String, String], sfDir: String,
-      forked: Boolean, subset: Boolean,
-      forkHeavy: Map[String, Either[String, (Double, Double, Double, Double)]] =
-        Map.empty,
-      skipped: Set[String] = Set.empty,
-      outFile: String = "",
-      passesQ: collection.Map[String, Int] = Map.empty,
-      deferred: Seq[String] = Seq.empty,
-      forkDeferred: Seq[String] = Seq.empty,
-      elapsedSec: Double = 0.0,
-      forkRosterNames: Seq[String] = Seq.empty): Unit = {
-    def map1(f: ((Double, Double, Double, Double)) => Double): String =
-      timings.map { case (k, v) => "\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val total = if (timings.nonEmpty) timings.values.map(_._1).sum else 0.0
-    // per-process walls for the heavy family (empty on subset runs):
-    // fork_wall ≈ idle-host figure + in-process figure high ⇒ the
-    // in-process residue is environmental (GC/CPU contention), not plan
-    val fw = forkHeavy.collect { case (k, Right(v)) =>
-      "\"" + k + "\":" + v._1 }.mkString("{", ",", "}")
-    val fe = forkHeavy.collect { case (k, Left(err)) =>
-      "\"" + k + "\":\"" + err + "\"" }.mkString("{", ",", "}")
-    // n_queries makes the headline self-describing: SURVEY/commit
-    // prose regenerates from the artifact instead of hand-counting
-    // (VERDICT r7 #8 — the 162.0s/137 vs 152.7s/139 bookkeeping drift)
-    val sk = skipped.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val pq = passesQ.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val df = deferred.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fd = forkDeferred.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the round's roster makes fork coverage self-describing: a name
-    // absent from fork_wall is either off-roster this round (rotation)
-    // or in fork_deferred — never silently dropped
-    val fr = forkRosterNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec"""" +
-      s""","n_queries":${timings.size},"n_errors":${errors.size}""" +
-      s""","queries":${map1(_._1)},"stage_ms":${map1(_._2)}""" +
-      s""","gc_ms":${map1(_._3)},"heap_delta_mb":${map1(v => math.rint(v._4))}""" +
-      s""","fork_wall":$fw,"fork_errors":$fe""" +
-      s""","skipped":$sk,"passes_q":$pq""" +
-      s""","deferred":$df,"fork_deferred":$fd,"fork_roster":$fr""" +
-      s""","elapsed_sec":${math.rint(elapsedSec)}""" +
-      // cpus makes stage_ms self-describing (r14 forensics: the r12
-      // artifact's 3.1x-lower stage totals turned out to be the 4-cpu
-      // default vs 32 — executorRunTime sums grow with task count, so
-      // cross-artifact stage ratios are only meaningful at equal cpus)
-      s""","cpus":${Harness.cpus}""" +
-      s""","errors":$es,"passes":$TimedPasses,"forked":$forked,"sf":"$sfDir"}"""
+    val (line, compact) = artifact(timings, errors, passesQ, deferred.toSeq,
+      skip, sfDir, outFile, elapsedSec, Harness.cpus, TimedPasses)
     println(line)
-    // Subset runs (SPARK_GRAFT_BENCH_ONLY) default to a DIFFERENT file:
-    // a debugging subset silently clobbering the official full-run
-    // artifact cost round 4 its bench evidence.
-    val outF = if (outFile.nonEmpty) outFile
-      else sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        if (subset) "BENCH_subset.json" else "BENCH_full.json")
-    // The driver keeps only the LAST ~2000 chars of stdout and parses
-    // JSON out of that tail — the full line above is ~8 KB at 160+
-    // queries, so its head (the "metric" key) scrolls out of the
-    // window and the driver has recorded `parsed: null` since round 6
-    // (VERDICT r8 #8). Emit a SECOND, compact headline as the final
-    // stdout line: same metric/value contract, per-query walls for
-    // only the 10 slowest (the full map lives in `full`'s file, which
-    // this line names), guaranteed to fit any reasonable tail window.
-    val top = timings.toSeq.sortBy(-_._2._1).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + v._1 }
-      .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec"""" +
-      s""","n_queries":${timings.size},"n_errors":${errors.size}""" +
-      s""","n_deferred":${deferred.size}""" +
-      s""","queries":$top,"full":"$outF","sf":"$sfDir"}"""
     println(compact)
     System.out.flush()
-    // the driver's stored tail truncated round 2's wall-time map; keep
-    // the full line on disk so no consumer has to reconstruct it.
-    java.nio.file.Files.write(java.nio.file.Paths.get(outF),
+    // a consumer that stores only the tail of stdout loses the
+    // wall-time map; keep the full line on disk so none has to
+    // reconstruct it.
+    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** Attribution mode: each query in its OWN JVM, so one query's heap
-    * state cannot taint another's timing. The child is this same main
-    * with fork mode off and SPARK_GRAFT_BENCH_ONLY pinned to one
-    * query; its JSON is parsed back by field regex (values are bare
-    * numbers by construction).
+  /** The run's full JSON line (written to `outFile`) and the compact
+    * headline that ends stdout.
+    *
+    * A runner that keeps only the LAST ~2000 chars of stdout parses
+    * JSON out of that tail — the full line is ~8 KB at 160+ queries,
+    * so its head (the "metric" key) would scroll out of the window. The
+    * compact line keeps the same metric/value contract with per-query
+    * walls for only the 10 slowest entries and names the file that
+    * holds the full map, so it fits any reasonable tail window.
     */
-  private def forkMain(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = Harness.envList("SPARK_GRAFT_BENCH_ONLY")
-    val names = Harness.select(only).map(_._1)
-    val timings = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Double, Double)]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    names.foreach { name =>
-      forkOne(name, sfDir) match {
-        case Right(t) => timings(name) = t
-        case Left(err) => errors(name) = err
-      }
-    }
-    emit(timings, errors, sfDir, forked = true, subset = only.nonEmpty)
-  }
-
-  /** Run ONE query's bench (warmup + `passes` timed passes; 0 =
-    * inherit the parent's pass count) in a fresh child JVM and parse
-    * back its (wall, stage, gc, heap) tuple. Shared by fork mode and
-    * the full run's heavy-family attribution pass.
-    */
-  private def forkOne(name: String, sfDir: String,
-      passes: Int = 0): Either[String, (Double, Double, Double, Double)] = {
-    val javaBin = new java.io.File(new java.io.File(
-      System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    // sbt's runMain classpath is the launcher jar; rebuild the real one
-    val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val sparkJars = "/opt/spark/jars/*"
-    def field(json: String, obj: String, n: String): Option[Double] = {
-      val p = ("\"" + obj + "\":\\{[^}]*\"" + java.util.regex.Pattern.quote(n) +
-        "\":(-?[0-9.eE+-]+)").r
-      p.findFirstMatchIn(json).map(_.group(1).toDouble)
-    }
-    val out = java.nio.file.Files.createTempFile("bench_fork_", ".json")
-    val pb = new ProcessBuilder(javaBin, "-cp", s"$classes:$sparkJars",
-      "-Xmx8g", "graft.Bench")
-    pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
-    pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
-    pb.environment().remove("SPARK_GRAFT_BENCH_FORK")
-    pb.environment().remove("SPARK_GRAFT_BENCH_NOHEAVY")
-    pb.environment().remove("SPARK_GRAFT_BENCH_SKIP")
-    pb.environment().remove("SPARK_GRAFT_BENCH_DEADLINE_SEC")
-    if (passes > 0)
-      pb.environment().put("SPARK_GRAFT_BENCH_PASSES", passes.toString)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(ProcessBuilder.Redirect.to(
-      new java.io.File("/dev/null")))
-    val code = pb.start().waitFor()
-    val json = try new String(java.nio.file.Files.readAllBytes(out)) catch {
-      case NonFatal(_) => ""
-    }
-    java.nio.file.Files.deleteIfExists(out)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(out.toString + ".progress.jsonl"))
-    (field(json, "queries", name), field(json, "stage_ms", name),
-      field(json, "gc_ms", name), field(json, "heap_delta_mb", name)) match {
-      case (Some(w), Some(s), g, h) =>
-        Right((w, s, g.getOrElse(0.0), h.getOrElse(0.0)))
-      case _ => Left(jsonSanitize(s"fork exit=$code ${json.take(120)}"))
-    }
+  private[graft] def artifact(
+      timings: collection.Map[String, Timing],
+      errors: collection.Map[String, String],
+      passesQ: collection.Map[String, Int],
+      deferred: Seq[String], skipped: Set[String],
+      sfDir: String, outFile: String, elapsedSec: Double,
+      cpus: Int, passes: Int): (String, String) = {
+    def obj[V](m: Iterable[(String, V)])(f: V => String): String =
+      m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    def arr(xs: Seq[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def str(s: String): String = "\"" + s + "\""
+    val total = timings.values.map(_.wall).sum
+    // n_queries makes the headline self-describing: prose regenerates
+    // from the artifact instead of hand-counting
+    val line = s"""{"metric":"total","value":$total,"unit":"sec"""" +
+      s""","n_queries":${timings.size},"n_errors":${errors.size}""" +
+      s""","queries":${obj(timings)(_.wall.toString)}""" +
+      s""","stage_ms":${obj(timings)(_.stageMs.toString)}""" +
+      s""","gc_ms":${obj(timings)(_.gcMs.toString)}""" +
+      s""","heap_delta_mb":${obj(timings)(t => math.rint(t.heapDeltaMb).toString)}""" +
+      s""","skipped":${arr(skipped.toSeq.sorted)}""" +
+      s""","passes_q":${obj(passesQ)(_.toString)}""" +
+      s""","deferred":${arr(deferred)}""" +
+      s""","elapsed_sec":${math.rint(elapsedSec)}""" +
+      // cpus makes stage_ms self-describing: executorRunTime sums grow
+      // with task count, so cross-artifact stage ratios are only
+      // meaningful at equal cpus
+      s""","cpus":$cpus""" +
+      s""","errors":${obj(errors)(str)},"passes":$passes,"sf":"$sfDir"}"""
+    val top = timings.toSeq.sortBy(-_._2.wall).take(10)
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec"""" +
+      s""","n_queries":${timings.size},"n_errors":${errors.size}""" +
+      s""","n_deferred":${deferred.size}""" +
+      s""","queries":${obj(top)(_.wall.toString)},"full":"$outFile","sf":"$sfDir"}"""
+    (line, compact)
   }
 }

@@ -14,7 +14,7 @@ object GraftSession {
   def create(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
       appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .withExtensions(new org.apache.spark.sql.graftx.GraftSparkExtensions)
       .master(master)
       .appName(appName)
@@ -23,7 +23,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.functions.VectorFns.register(spark)
-    spark
   }
 }

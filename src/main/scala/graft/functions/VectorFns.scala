@@ -1,20 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftx.{bridge, CharEntropy, FloatVectorDot, Md5Hash32, MediaDHashExpr, MediaMetaExpr, MediaWrapExpr, SortedIntersectCount, SpaceSavingAggregate, SpaceSavingMergeAggregate, TopKAggregate}
 
 /** Column/SQL facade over graft's native Catalyst expressions
   * (see org.apache.spark.sql.graftx.FloatVectorDot / TopKAggregate).
   */
 object VectorFns {
-  /** Column API: dot product of two ArrayType(FloatType) columns. */
+  /** Column API: dot product of two ArrayType(FloatType) columns. In
+    * SQL it is `vec_dot(a, b)` on any session built with
+    * graftx.GraftSparkExtensions (every GraftSession).
+    */
   def vec_dot(a: Column, b: Column): Column =
     bridge.column(FloatVectorDot(bridge.expression(a), bridge.expression(b)))
-
-  /** SQL registration: SELECT vec_dot(a, b) ... */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "scala_udf")
 
   /** Intersection size of two ascending-sorted ArrayType(LongType)
     * columns — codegen'd two-pointer merge, zero allocation (see

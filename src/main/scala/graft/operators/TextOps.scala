@@ -357,11 +357,9 @@ object TextOps {
     * TakeOrderedAndProject: each task keeps a k-row heap, the driver
     * merges k·tasks rows — NO global sort of the vocabulary (a
     * 100 M-token vocab never passes through one partition). The final
-    * rank is a window over the already-limited k rows — bounded by
-    * construction.
+    * rank runs over the already-limited k rows.
     */
   def vocabTopK(documents: DataFrame, k: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tf = documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -369,9 +367,8 @@ object TextOps {
       .agg(sum("tf").as("cf"), count(lit(1)).as("df"))
       .orderBy(col("cf").desc, col("tok"))
       .limit(k)
-    head.withColumn("rank",
-      row_number().over(Window.orderBy(col("cf").desc, col("tok"))).cast("long"))
-      .select("rank", "tok", "cf", "df")
+    // at most k rows: the limit above
+    rankSmall(head, -col("cf"), col("tok")).select("rank", "tok", "cf", "df")
   }
 
   /** C38: per-document out-of-vocabulary rate against the corpus'
@@ -637,9 +634,10 @@ object TextOps {
     * budget exceeding some stratum's size fails fast naming the dial
     * rather than silently under-sampling.
     *
-    * Scale: one |strata|-row co-moment agg + 1-row broadcast totals +
-    * one priority window per stratum (B8's per-group top-k class) —
-    * the corpus shuffles once on the stratum key.
+    * Scale: one |strata|-row co-moment agg + one global aggregate over
+    * those rows for the totals + one priority window per stratum (B8's
+    * per-group top-k class) — the corpus shuffles once on the stratum
+    * key.
     */
   def sampleStratified(documents: DataFrame, k: Int = 100,
       strata: String = "source"): DataFrame = {
@@ -657,9 +655,18 @@ object TextOps {
         > col("s1") * col("s1"),
       floor(nD * sqrt(varh) * lit(1.0e6)).cast("long"))
       .otherwise(lit(0L))
+    // one row per stratum, and `strata` is a low-cardinality column (a
+    // corpus has a handful of sources): one global aggregate totals the
+    // weights and hands the strata back, each carrying the total, so
+    // the windows below partition by the total that every row shares
+    // (a literal key would be optimized away into an unpartitioned
+    // window, which Spark warns about)
     val weighted = g.withColumn("wq", wq)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
+      .agg(sum(col("wq")).as("wq_tot"),
+        collect_list(struct(col("stratum"), col("n_h"), col("wq"))).as("xs"))
+      .select(col("wq_tot"), explode(col("xs")).as("x"))
+      .select(col("x.stratum"), col("x.n_h"), col("x.wq"), col("wq_tot"))
+    val wAll = org.apache.spark.sql.expressions.Window.partitionBy("wq_tot")
     // the division is gated on wq_tot > 0 (ANSI mode turns the
     // degenerate 0/0 into a task-level DIVIDE_BY_ZERO before the
     // fail-fast probe below can run; a null ideal flows through the
@@ -670,13 +677,12 @@ object TextOps {
     // size-thresholded persist: the guard's head(1) and the broadcast
     // join both read the seat plan (one corpus scan each otherwise)
     val seats = graft.CacheRegistry.persistIfLarge(weighted
-      .withColumn("wq_tot", sum(col("wq")).over(wAll))
       .withColumn("ideal", ideal)
       .withColumn("base", floor(col("ideal")).cast("long"))
       .withColumn("rem", col("ideal") - col("base").cast("double"))
       .withColumn("leftover", lit(k.toLong) - sum(col("base")).over(wAll))
-      .withColumn("rr", row_number().over(org.apache.spark.sql.expressions
-        .Window.orderBy(col("rem").desc, col("stratum"))))
+      .withColumn("rr", row_number().over(
+        wAll.orderBy(col("rem").desc, col("stratum"))))
       .select(col("stratum"),
         (col("base") + when(col("rr") <= col("leftover"), 1L)
           .otherwise(0L)).as("seats"),
@@ -969,7 +975,6 @@ object TextOps {
     * transform+element_at form measured 2.6× whole-query wall here).
     */
   def bpePairs(documents: DataFrame, k: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val head = documents
       .select(tokens(col("text")).as("toks"))
       .select(explode(
@@ -978,9 +983,8 @@ object TextOps {
       .groupBy("pair").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("pair"))
       .limit(k)
-    head.withColumn("rank",
-      row_number().over(Window.orderBy(col("n").desc, col("pair"))).cast("long"))
-      .select("rank", "pair", "n")
+    // at most k rows: the limit above
+    rankSmall(head, -col("n"), col("pair")).select("rank", "pair", "n")
   }
 
   /** C80 (r11, VERDICT r10 #3): ITERATIVE BPE merge training — the
@@ -1064,8 +1068,9 @@ object TextOps {
     * 1-to-N-row broadcast (the stored pairs are token-disjoint BY
     * CONSTRUCTION of the trainer's selection, a set property
     * independent of which corpus they apply to), and the rewrite is
-    * the island-parity pass verbatim — no counting, no selection, no
-    * training-side work anywhere in the plan.
+    * the trainer's own island-parity pass ([[bpeRewrite]]) — no
+    * counting, no selection, no training-side work anywhere in the
+    * plan.
     *
     * Scale shape per round: ONE doc-partitioned window pass over the
     * apply corpus + a broadcast of ≤64 merge rows; rounds = the
@@ -1074,18 +1079,10 @@ object TextOps {
     */
   def bpeApply(documents: DataFrame, merges: DataFrame,
       rounds: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 16,
       s"BPE merge rounds is a small fixed dial, got $rounds")
     val bridge = org.apache.spark.sql.graftx.bridge
-    import graft.CacheRegistry.{releaseCheckpoint => release}
-    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
-    var cur = bridge.plainLocalCheckpoint(
-      documents.select(col("doc_id"),
-          posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("tok")))
-    graft.CacheRegistry.registerCheckpoint(cur)
+    var cur = bpeTokens(documents)
     for (r <- 1 to rounds) {
       // the frozen round-r pair set: "a b" splits on the single
       // space bpeTrain's publisher writes (tokens never contain
@@ -1094,33 +1091,83 @@ object TextOps {
       val sel = merges.filter(col("round") === r.toLong)
         .select(element_at(split(col("pair"), " ", 2), 1).as("a"),
           element_at(split(col("pair"), " ", 2), 2).as("b"))
-      val big = cur.withColumn("nxt", lead(col("tok"), 1).over(wDoc))
-      val j = big.join(broadcast(sel),
-          col("tok") === col("a") && col("nxt") === col("b"), "left")
-        .withColumn("m", col("a").isNotNull)
-      // r14 (guide §2.4): same single-window-chain island-parity pass
-      // as [[bpeLoop]] — one doc_id shuffle per round instead of the
-      // (doc_id, isl) window + (doc_id, pos) join-back (see the
-      // equivalence note there)
-      val islStart = max(when(col("m")
-          && !coalesce(lag(col("m"), 1).over(wDoc), lit(false)), col("pos")))
-        .over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-      val merged = j
-        .withColumn("elig",
-          col("m") && (col("pos") - islStart) % 2 === 0)
-        .withColumn("consumed",
-          coalesce(lag(col("elig"), 1).over(wDoc), lit(false)))
-        .filter(!col("consumed"))
-        .select(col("doc_id"),
-          row_number().over(wDoc).cast("long").as("pos"),
-          when(col("elig"), concat(col("tok"), lit("+"), col("nxt")))
-            .otherwise(col("tok")).as("tok"))
-      val next = bridge.plainLocalCheckpoint(merged)
+      val next = bridge.plainLocalCheckpoint(
+        bpeRewrite(bpeWithNext(cur), sel).drop("mp"))
       graft.CacheRegistry.registerCheckpoint(next)
-      release(cur)
+      graft.CacheRegistry.releaseCheckpoint(cur)
       cur = next
     }
     cur
+  }
+
+  private val bpeDoc =
+    org.apache.spark.sql.expressions.Window.partitionBy("doc_id").orderBy("pos")
+
+  /** The corpus as a pinned long-form token table (doc_id, pos, tok),
+    * `pos` 1-based, registered with CacheRegistry.
+    */
+  private def bpeTokens(documents: DataFrame): DataFrame = {
+    val t = org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
+      documents.select(col("doc_id"),
+          posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
+        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
+          col("tok")))
+    graft.CacheRegistry.registerCheckpoint(t)
+    t
+  }
+
+  /** A token table with each position's successor token as `nxt`. */
+  private def bpeWithNext(toks: DataFrame): DataFrame =
+    toks.withColumn("nxt", lead(col("tok"), 1).over(bpeDoc))
+
+  /** One BPE rewrite pass over `big` ([[bpeWithNext]]'s shape) with the
+    * token-disjoint pair set `pairs` (a, b), shared by the trainer and
+    * the frozen-table apply: every match merges left-to-right
+    * non-overlapping into "a+b". Returns (doc_id, pos, tok, mp), with
+    * `pos` renumbered and `mp` = "a b" on the merged rows (null
+    * elsewhere).
+    */
+  private def bpeRewrite(big: DataFrame, pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // selected pairs are token-disjoint, so a position matches at
+    // most ONE pair — the broadcast equi-left-join marks it
+    val j = big.join(broadcast(pairs),
+        col("tok") === col("a") && col("nxt") === col("b"), "left")
+      .withColumn("m", col("a").isNotNull)
+    // greedy left-to-right: islands of CONSECUTIVE match positions
+    // (gaps-and-islands on pos), merge offsets 1, 3, … within each.
+    // Disjointness means consecutive matches are always the SAME
+    // pair (adjacent different-pair matches would share the middle
+    // token), so the parity rule is per-pair exactly as at batch 1.
+    //
+    // The parity pass is ONE window chain on the (doc_id, pos)
+    // ordering instead of a filter-to-matches → (doc_id, isl)-window →
+    // join-back shape, which paid a second exchange (the isl partition
+    // key) plus a (doc_id, pos) sort-merge join back per round. An
+    // island is a maximal run of consecutive match POSITIONS, so its
+    // start is `m && !lag(m)` and the running max of start positions
+    // gives every match row its island start; within-island rank
+    // parity (row_number over (doc_id, isl) odd) is exactly
+    // (pos − isl_start) even. All frames share bpeDoc's sort — the
+    // round's rewrite shuffles the corpus ONCE.
+    val islStart = max(when(col("m")
+        && !coalesce(lag(col("m"), 1).over(bpeDoc), lit(false)), col("pos")))
+      .over(bpeDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    j.withColumn("elig",
+        col("m") && (col("pos") - islStart) % 2 === 0)
+      .withColumn("consumed",
+        coalesce(lag(col("elig"), 1).over(bpeDoc), lit(false)))
+      .filter(!col("consumed"))
+      .select(col("doc_id"),
+        row_number().over(bpeDoc).cast("long").as("pos"),
+        when(col("elig"), concat(col("tok"), lit("+"), col("nxt")))
+          .otherwise(col("tok")).as("tok"),
+        // merge provenance, so the trainer's stats row reads the
+        // pinned leaf instead of re-running the whole rewrite
+        // (eligible rows are never consumed — an elig row's
+        // predecessor is never elig by parity — so every merge
+        // survives the filter)
+        when(col("elig"), concat_ws(" ", col("a"), col("b"))).as("mp"))
   }
 
   /** Shared trainer/encoder loop: returns (merge-stats frame, final
@@ -1128,27 +1175,19 @@ object TextOps {
     */
   private def bpeLoop(documents: DataFrame,
       rounds: Int, batch: Int = 1): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 16,
       s"BPE merge rounds is a small fixed dial, got $rounds")
     require(batch >= 1 && batch <= 64,
       s"BPE merges per round is a small fixed dial, got $batch")
     val bridge = org.apache.spark.sql.graftx.bridge
-    import graft.CacheRegistry.{releaseCheckpoint => release}
-    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     // curCk is the release HANDLE (the raw checkpoint leaf — from
     // round 1 on, `cur` is a projection over it and checkpointRdd
     // can't unpin through a Project)
-    var curCk = bridge.plainLocalCheckpoint(
-      documents.select(col("doc_id"),
-          posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("tok")))
-    graft.CacheRegistry.registerCheckpoint(curCk)
+    var curCk = bpeTokens(documents)
     var cur: DataFrame = curCk
     var stats: DataFrame = null
     for (r <- 1 to rounds) {
-      val big = cur.withColumn("nxt", lead(col("tok"), 1).over(wDoc))
+      val big = bpeWithNext(cur)
       // top-`batch` candidates by (n DESC, a, b) via TakeOrdered, then
       // the NON-RECURSIVE disjointness filter: a candidate survives
       // iff it shares no token with ANY higher-ranked candidate — a
@@ -1159,61 +1198,21 @@ object TextOps {
         .groupBy(col("tok").as("a"), col("nxt").as("b"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("a"), col("b")).limit(batch)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("n").desc, col("a"), col("b"))))
       val sel =
-        if (batch == 1) cand.select(col("a"), col("b"), col("n"))
-        else cand.as("c").join(cand.as("d"),
-            col("d.rk") < col("c.rk")
-              && (col("d.a") === col("c.a") || col("d.a") === col("c.b")
-                || col("d.b") === col("c.a") || col("d.b") === col("c.b")),
-            "left_anti")
-          .select(col("a"), col("b"), col("n"))
+        if (batch == 1) cand
+        else {
+          // at most `batch` (≤ 64) rows: the limit above
+          val ranked = rankSmall(cand, -col("n"), col("a"), col("b"))
+          ranked.as("c").join(ranked.as("d"),
+              col("d.rank") < col("c.rank")
+                && (col("d.a") === col("c.a") || col("d.a") === col("c.b")
+                  || col("d.b") === col("c.a") || col("d.b") === col("c.b")),
+              "left_anti")
+            .select(col("a"), col("b"), col("n"))
+        }
       val top = bridge.plainLocalCheckpoint(sel)
       graft.CacheRegistry.registerCheckpoint(top)
-      // selected pairs are token-disjoint, so a position matches at
-      // most ONE pair — the broadcast equi-left-join marks it
-      val j = big.join(broadcast(top),
-          col("tok") === col("a") && col("nxt") === col("b"), "left")
-        .withColumn("m", col("a").isNotNull)
-      // greedy left-to-right: islands of CONSECUTIVE match positions
-      // (gaps-and-islands on pos), merge offsets 1, 3, … within each.
-      // Disjointness means consecutive matches are always the SAME
-      // pair (adjacent different-pair matches would share the middle
-      // token), so the parity rule is per-pair exactly as at batch 1.
-      //
-      // r14 (guide §2.4): the parity pass is now ONE window chain on
-      // the (doc_id, pos) ordering instead of the former
-      // filter-to-matches → (doc_id, isl)-window → join-back shape,
-      // which paid a second exchange (the isl partition key) plus a
-      // (doc_id, pos) sort-merge join back per round. An island is a
-      // maximal run of consecutive match POSITIONS, so its start is
-      // `m && !lag(m)` and the running max of start positions gives
-      // every match row its island start; within-island rank parity
-      // (old: row_number over (doc_id, isl) odd) is exactly
-      // (pos − isl_start) even. All frames share wDoc's sort — the
-      // round's rewrite shuffles the corpus ONCE.
-      val islStart = max(when(col("m")
-          && !coalesce(lag(col("m"), 1).over(wDoc), lit(false)), col("pos")))
-        .over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-      val merged = j
-        .withColumn("elig",
-          col("m") && (col("pos") - islStart) % 2 === 0)
-        .withColumn("consumed",
-          coalesce(lag(col("elig"), 1).over(wDoc), lit(false)))
-        .filter(!col("consumed"))
-        .select(col("doc_id"),
-          row_number().over(wDoc).cast("long").as("pos"),
-          when(col("elig"), concat(col("tok"), lit("+"), col("nxt")))
-            .otherwise(col("tok")).as("tok"),
-          // merge provenance rides INTO the checkpoint so the stats
-          // row below reads the pinned leaf instead of re-running the
-          // whole rewrite (eligible rows are never consumed — an elig
-          // row's predecessor is never elig by parity, so every merge
-          // survives the filter and the per-pair counts are identical
-          // to the former pre-filter groupBy)
-          when(col("elig"), concat_ws(" ", col("a"), col("b"))).as("mp"))
-      val next = bridge.plainLocalCheckpoint(merged)
+      val next = bridge.plainLocalCheckpoint(bpeRewrite(big, top))
       graft.CacheRegistry.registerCheckpoint(next)
       // per-selected-pair stats rows — both inputs (top, next) are
       // pinned leaves, so this costs two tiny scans of the checkpoint
@@ -1228,12 +1227,31 @@ object TextOps {
             coalesce(col("n_merges"), lit(0L)).as("n_merges"),
             col("vocab_size")))
       graft.CacheRegistry.registerCheckpoint(row)
-      release(curCk)
+      graft.CacheRegistry.releaseCheckpoint(curCk)
       curCk = next
       cur = next.select(col("doc_id"), col("pos"), col("tok"))
       stats = if (stats == null) row else stats.unionByName(row)
     }
     (stats, cur)
+  }
+
+  /** `rows` with a 1-based long `rank` column first, numbered in
+    * ascending order of the struct of `key` columns (negate a numeric
+    * key to rank it descending). For frames of a few hundred rows at
+    * most — each caller says why its frame is bounded: one global
+    * aggregate collects the rows, sorts them and posexplodes them
+    * back, with no exchange after a limit. A window with no partition
+    * key would rank the same rows, but Spark warns on every plan of
+    * one, and a literal key such as lit(1) is optimized away into that
+    * same window.
+    */
+  private def rankSmall(rows: DataFrame, key: Column*): DataFrame = {
+    val cols = rows.columns.toSeq
+    rows.agg(sort_array(collect_list(struct(struct(key: _*).as("k"),
+        struct(cols.map(col): _*).as("r")))).as("xs"))
+      .select(posexplode(col("xs")).as(Seq("p", "x")))
+      .select((col("p") + 1).cast("long").as("rank") +:
+        cols.map(c => col("x.r").getField(c).as(c)): _*)
   }
 
   /** 32-bit md5-derived token hash, bit-identical to DuckDB's

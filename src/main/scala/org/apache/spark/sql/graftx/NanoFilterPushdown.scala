@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -86,10 +87,15 @@ case class NanoFilterPushdown(dummy: Boolean = true) extends Rule[LogicalPlan] {
 /** Session extensions entry point:
   * `--conf spark.sql.extensions=org.apache.spark.sql.graftx.GraftSparkExtensions`
   * or `SparkSession.builder.withExtensions(new GraftSparkExtensions)`.
+  * Registers the SQL function `vec_dot(a, b)` once, when the session is
+  * built (see graft.functions.VectorFns.vec_dot).
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => NanoFilterPushdown())
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectFunction((FunctionIdentifier("vec_dot"),
+      new ExpressionInfo(classOf[FloatVectorDot].getCanonicalName, "vec_dot"),
+      exprs => FloatVectorDot(exprs(0), exprs(1))))
   }
 }

@@ -158,15 +158,8 @@ object bridge extends org.apache.spark.internal.Logging {
     // Spark's own position-wise assoc, dropping to Unknown/Nil if the
     // outputs don't align — a wrong declaration here would silently
     // skip NEEDED exchanges, so misalignment must fail closed
-    // A/B toggle (perf measurement + escape hatch): carrying a LOW
-    // partition count (AQE-coalesced) can force a later big-side join
-    // down to it — if that ever bites, disable the carry per JVM
-    val assoc =
-      if (!java.lang.Boolean.parseBoolean(
-          System.getProperty("graft.checkpoint.carryPartitioning", "true")))
-        None
-      else org.apache.spark.sql.execution.LogicalRDD
-        .buildOutputAssocForRewrite(finalPlan.output, qe.analyzed.output)
+    val assoc = org.apache.spark.sql.execution.LogicalRDD
+      .buildOutputAssocForRewrite(finalPlan.output, qe.analyzed.output)
     import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression => CExpr, SortOrder}
     val minParts = ds.sparkSession.sessionState.conf.numShufflePartitions
     val (part, ordering) = assoc match {
