@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftx.bridge
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 /** Tracks the caches operators pin — persisted frames and
-  * `localCheckpoint` RDDs — and releases them deterministically.
+  * checkpointed RDDs — and releases them deterministically.
   * Without this, cached blocks accumulate across the 40+ queries a
   * single Verify JVM runs — evicting useful cache and leaking executor
   * disk in long-lived sessions.
@@ -20,6 +21,11 @@ import scala.util.control.NonFatal
   * the consuming action; operator results live there. No scope ever
   * releases a pin it did not register, so a result held elsewhere in
   * the session stays readable.
+  *
+  * Every eager checkpoint in the library goes through [[pin]], and
+  * every iterative kernel runs its rounds through [[rounds]], so how a
+  * frame is pinned, how long the pin lives and whether it survives an
+  * executor loss are decided here alone.
   */
 object CacheRegistry {
   /** The release actions of one scope's pins. Guarded by the registry
@@ -37,16 +43,24 @@ object CacheRegistry {
     (if (s.closed) root else s).pins += release
   }
 
-  /** Close `s` (unless it is the root) and release its pins. */
-  private def drain(s: Scope, blocking: Boolean): Unit = {
-    val pins = synchronized {
-      if (s ne root) s.closed = true
-      val p = s.pins.toList
-      s.pins.clear()
-      p
-    }
-    pins.foreach(release =>
+  /** Close `s` (unless it is the root) and take its pins. */
+  private def close(s: Scope): List[Boolean => Unit] = synchronized {
+    if (s ne root) s.closed = true
+    val p = s.pins.toList
+    s.pins.clear()
+    p
+  }
+
+  /** Close `s` and release its pins. */
+  private def drain(s: Scope, blocking: Boolean): Unit =
+    close(s).foreach(release =>
       try release(blocking) catch { case NonFatal(_) => () })
+
+  /** Run `body` with `s` as this thread's open scope. */
+  private def within[T](s: Scope)(body: => T): T = {
+    val outer = open.get
+    open.set(s)
+    try body finally open.set(outer)
   }
 
   /** Persist at MEMORY_AND_DISK and remember the handle. */
@@ -75,21 +89,22 @@ object CacheRegistry {
     if (leafBytes >= minInputBytes) persist(df) else df
   }
 
-  /** Register a `localCheckpoint`ed frame's pinned RDD for release with
-    * its scope. `Dataset.unpersist` does not touch checkpoint
+  /** Register a checkpointed frame's pinned RDD for release with the
+    * open scope. `Dataset.unpersist` does not touch checkpoint
     * blocks and the async ContextCleaner only reclaims them after GC
     * notices the RDD is unreachable — in a long-lived session running
     * the dedup pipeline repeatedly that lag stacks storage pressure
     * into exactly the queries that need execution memory (VERDICT r4
-    * #2). Registering gives a deterministic release point.
+    * #2). Registering gives a deterministic release point. [[pin]]
+    * registers its own result; a caller registers a pin again only to
+    * release it with an inner scope.
     */
-  def registerCheckpoint(df: DataFrame): DataFrame = {
-    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
-      .foreach(r => register(r.unpersist(_)))
+  private[graft] def registerCheckpoint(df: DataFrame): DataFrame = {
+    bridge.checkpointRdd(df).foreach(r => register(r.unpersist(_)))
     df
   }
 
-  /** Release a `localCheckpoint`ed frame's pinned blocks NOW (a no-op
+  /** Release a checkpointed frame's pinned blocks NOW (a no-op
     * for a frame that is not a checkpoint leaf). Checkpoint blocks are
     * released DETERMINISTICALLY, not left to the async ContextCleaner:
     * without this, five clustering queries per bench pass stack dead
@@ -98,9 +113,99 @@ object CacheRegistry {
     * running the pipeline repeatedly leaks the same way.
     */
   def releaseCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.graftx.bridge.checkpointRdd(df).foreach { r =>
+    bridge.checkpointRdd(df).foreach { r =>
       try r.unpersist(false) catch { case NonFatal(_) => () }
     }
+
+  /** Eagerly checkpoint `df` and register the pin in the caller's
+    * scope. `df` is built in a scope of its own, so every cache its
+    * construction registers is released once the pin has materialized:
+    * nothing reads them after that. The checkpoint is the bridge's
+    * plain leaf, without `Dataset.localCheckpoint`'s origin-metadata
+    * capture, whose cost doubles per round in a loop that reads the
+    * previous round's pin twice (bridge.plainCheckpoint).
+    *
+    * Durability is the session's: with a checkpoint dir set on the
+    * SparkContext (by `spark.checkpoint.dir` or its setter) the
+    * pin is a RELIABLE checkpoint into it, which survives executor
+    * loss; otherwise it is a local checkpoint into executor blocks,
+    * which dies with its executor. MLlib's iterative trainers decide
+    * the same way. Reliable checkpoint files stay in the dir.
+    */
+  def pin(df: => DataFrame): DataFrame = checkpoint(df, None)._1
+
+  /** [[pin]] whose materializing job also returns the row count and
+    * the exact sum of the long column `sumCol` — the closure's
+    * convergence probe, so a round pays one job, not two.
+    */
+  private[graft] def pinSumLong(df: => DataFrame,
+      sumCol: String): (DataFrame, Long, java.math.BigInteger) =
+    checkpoint(df, Some(sumCol))
+
+  private def checkpoint(df: => DataFrame, sumCol: Option[String])
+      : (DataFrame, Long, java.math.BigInteger) = {
+    val out @ (pinned, _, _) = scoped {
+      val d = df
+      val reliable = d.sparkSession.sparkContext.getCheckpointDir.isDefined
+      bridge.plainCheckpoint(d, reliable, sumCol)
+    }
+    registerCheckpoint(pinned)
+    out
+  }
+
+  /** What [[rounds]] returns: the last round's state, the number of
+    * rounds run and whether the kernel reported convergence.
+    */
+  final case class Rounds[S](state: S, rounds: Int, converged: Boolean)
+
+  /** Run one iterative kernel's rounds: `init` is round 0, and round
+    * r = 1, 2, … computes `step(state, r)` until `maxRounds` rounds
+    * have run or `converged(previous, next)` holds. Each round runs in
+    * a scope of its own that stays open until the next round has
+    * finished, so round r can still read the pins of round r − 1; then
+    * they are released. The last round's pins pass to the caller's
+    * scope. A kernel releases a frame it is finished with inside its
+    * own round. Every Spark job of round r carries the job tag
+    * `graft.<kernel>.round.<r>` (tags add to the caller's own tags and
+    * job group), so a listener can attribute jobs to rounds.
+    *
+    * The cap is the kernel's to enforce: fixed-round kernels run
+    * exactly `maxRounds`, and a kernel that stops on convergence
+    * checks `converged` on the result.
+    */
+  def rounds[S](kernel: String, maxRounds: Int)(init: => S)(
+      step: (S, Int) => S,
+      converged: (S, S) => Boolean = (_: S, _: S) => false): Rounds[S] = {
+    val sc = SparkSession.active.sparkContext
+    def round[T](r: Int, s: Scope)(body: => T): T = {
+      val tag = s"graft.$kernel.round.$r"
+      sc.addJobTag(tag)
+      try within(s)(body) finally sc.removeJobTag(tag)
+    }
+    var held = new Scope // the pins of the last finished round
+    var running = held
+    var ok = false
+    try {
+      var state = round(0, held)(init)
+      var r = 0
+      var done = false
+      while (!done && r < maxRounds) {
+        r += 1
+        running = new Scope
+        val next = round(r, running)(step(state, r))
+        done = converged(state, next)
+        drain(held, blocking = false)
+        state = next
+        held = running
+      }
+      ok = true
+      close(held).foreach(register)
+      Rounds(state, r, done)
+    } finally if (!ok) {
+      drain(running, blocking = false)
+      drain(held, blocking = false)
+    }
+  }
 
   /** Run `body` in a new scope: every pin this thread registers inside
     * it (and not inside a nested scope) is released when `body`
@@ -108,14 +213,8 @@ object CacheRegistry {
     * threads, are left alone.
     */
   def scoped[T](body: => T): T = {
-    val outer = open.get
     val s = new Scope
-    open.set(s)
-    try body
-    finally {
-      open.set(outer)
-      drain(s, blocking = false)
-    }
+    try within(s)(body) finally drain(s, blocking = false)
   }
 
   /** `body` as a thunk that registers its pins in the scope open on
@@ -125,11 +224,7 @@ object CacheRegistry {
     */
   private[graft] def inCallerScope[T](body: => T): () => T = {
     val s = open.get
-    () => {
-      val outer = open.get
-      open.set(s)
-      try body finally open.set(outer)
-    }
+    () => within(s)(body)
   }
 
   /** Release the root list: every pin registered outside any scope,

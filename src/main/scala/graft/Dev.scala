@@ -13,9 +13,10 @@ import scala.util.control.NonFatal
   *    `--out <dir> <suffix>` writes it to `<dir>/<name>_<suffix>.txt`
   *    (the `plans/` evidence files);
   *  - `jobs` runs ONE query with the noop sink `passes` times and prints
-  *    a per-Spark-job wall breakdown (job id, duration, tasks,
-  *    description), so multi-job operators (the closure loop,
-  *    streaming gates, iterative trainers) are attributable job by job.
+  *    a per-Spark-job wall breakdown (job id, duration, tasks, job
+  *    tags, description), so multi-job operators (the closure loop,
+  *    streaming gates, iterative trainers) are attributable job by job;
+  *    an iterative kernel's jobs carry `graft.<kernel>.round.<r>`.
   */
 object Dev {
   private val Usage =
@@ -93,10 +94,12 @@ object Dev {
     val done = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Int, Double, String, Int)]())
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(key: String) = Option(j.properties.getProperty(key)).getOrElse("")
         started.put(j.jobId, (System.nanoTime(),
-          Option(j.properties.getProperty("spark.job.description")).getOrElse(""),
+          f"${prop("spark.job.tags")}%-28s ${prop("spark.job.description")}",
           j.stageInfos.map(_.numTasks).sum))
+      }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         // remove, don't just read: a multi-pass run otherwise grows the
         // map without bound (ADVICE r14)

@@ -825,18 +825,21 @@ object DedupOps {
     * components by definition and join back at the end, so the
     * iterated state is |docs touching an edge|, not |corpus|.
     *
-    * Requires `maxIters >= 1`: the closure has no 0-round form, so a
-    * 0 budget fails with IllegalArgumentException.
+    * Round cap: the loop stops when two consecutive rounds give the
+    * same label sum, so any input with a pair needs `maxIters >= 2`.
+    * Reaching `maxIters` unconverged throws IllegalStateException
+    * (partial labels are never returned), and a 0 budget fails with
+    * IllegalArgumentException. Durability is the session's: see
+    * [[propagateMin]].
     */
   def dedupGroups(documents: DataFrame, minJaccard: Double = 0.7,
-      maxIters: Int = 50, checkpointDir: Option[String] = None,
-      reliableEvery: Int = 10): DataFrame = {
+      maxIters: Int = 50): DataFrame = {
     // pair generation via the prefix-filtered join — identical output
     // to ngramJaccard (same oracle verifies both), measured ~2x faster
     // wall, and at τ=0.7 the prefix filter is at its most selective
     val labels = closure(
       ngramJaccardPrefix(documents, minJaccard).select("id1", "id2"),
-      maxIters, checkpointDir, reliableEvery)
+      maxIters)
     // r14 (guide §2.4): sizes from the LABELS leaf, not from the
     // corpus-wide `all` frame — every member of a multi-node component
     // touches an edge, so it is labeled, and component sizes over
@@ -891,23 +894,19 @@ object DedupOps {
     * undirected `pairs` as the edge list, run [[propagateMin]] over it,
     * release the edges, and return the (doc_id, component) labels.
     *
-    * The edge pin is eager: a localCheckpoint, not a persist — the
-    * loop joins the edges every round, and with a persist the cached
-    * plan still carries the pair generator's lineage, whose swinging
-    * AQE stat estimates flipped the loop's join strategies (measured
-    * 2x regression switching generators). With `checkpointDir` set
-    * the edges go to RELIABLE storage instead, so executor loss cannot
-    * strand the whole loop's input (VERDICT r5 #8). `pairs` is by-name
-    * and is built inside the pin's scope, so every cache the pair
-    * generator registers is released once the edges are pinned,
-    * before round 1 — nothing downstream re-reads them.
+    * The edge pin is eager: a checkpoint, not a persist — the loop
+    * joins the edges every round, and with a persist the cached plan
+    * still carries the pair generator's lineage, whose swinging AQE
+    * stat estimates flipped the loop's join strategies (measured 2x
+    * regression switching generators). `pairs` is by-name and is
+    * built inside the pin's scope, so every cache the pair generator
+    * registers is released once the edges are pinned, before round 1
+    * — nothing downstream re-reads them.
     */
-  private[operators] def closure(pairs: => DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None,
-      reliableEvery: Int = 10): DataFrame = {
-    val edges = graft.CacheRegistry.scoped(
-      pinReliable(bothDirections(pairs), checkpointDir))
-    val labels = propagateMin(edges, maxIters, checkpointDir, reliableEvery)
+  private[operators] def closure(pairs: => DataFrame,
+      maxIters: Int = 50): DataFrame = {
+    val edges = graft.CacheRegistry.pin(bothDirections(pairs))
+    val labels = propagateMin(edges, maxIters)
     graft.CacheRegistry.releaseCheckpoint(edges)
     labels
   }
@@ -947,156 +946,99 @@ object DedupOps {
     (ra, rb)
   }
 
-  /** Eager checkpoint, durability chosen by the caller: with a
-    * `checkpointDir` the frame goes to RELIABLE storage
-    * (`Dataset.checkpoint` — survives executor loss; the dir is set
-    * once per SparkContext), otherwise `localCheckpoint` (executor
-    * memory/disk — cheap, but blocks die with their executor; fine on
-    * local[n], the documented fragility on a real cluster).
-    */
-  // setCheckpointDir mints a fresh UUID subdir per call — set it only
-  // when the requested base dir actually changes
-  private val lastCkptDir =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-  private def pinReliable(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (lastCkptDir.getAndSet(dir) != dir || sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(dir)
-        df.checkpoint(true)
-      case None => df.localCheckpoint(true)
-    }
-
-
   /** Min-label propagation with pointer halving over a BIDIRECTIONAL,
     * already-checkpointed edge list (id1, id2) — the closure kernel
     * shared by [[dedupGroups]] (raw doc graph) and [[dedupIncremental]]
     * (prior-component-collapsed graph). Returns (doc_id, component)
     * for every node touching an edge; component = min node id of the
-    * connected component. Each round's intermediates are unpersisted
-    * the moment the next eager checkpoint has materialized; the final
-    * frame is registered with CacheRegistry so the harness releases it
-    * after the consuming action. `edges`' own blocks stay with the
-    * caller.
+    * connected component. The rounds run in
+    * [[graft.CacheRegistry.rounds]]: a round's pins are released once
+    * the next round has pinned its labels, and the final labels pass to
+    * the caller's scope, so the harness releases them after the
+    * consuming action. `edges`' own blocks stay with the caller.
     *
-    * Durability (VERDICT r5 #8): by default every round is
-    * `localCheckpoint` — cheap, but its blocks live only on executors,
-    * so on a real cluster an executor loss mid-loop kills the job
-    * (lineage is truncated; nothing can recompute the lost blocks).
-    * With `checkpointDir` set, the carried label frame goes to
-    * RELIABLE storage every `reliableEvery`-th round (the fused first
-    * round removed the former round-0 identity pin, so the first
-    * reliable pin lands at round `reliableEvery`): a loss inside the
-    * window still fails the job, but the restart re-runs from scratch
-    * at most `reliableEvery` rounds of work behind, and
-    * `reliableEvery = 1` makes every round durable (one DFS write of
-    * a 2-long-column frame per round — the right trade on a 100 TB
-    * corpus where a round is minutes of work).
+    * Durability (VERDICT r5 #8) is the session's: every pin goes
+    * through [[graft.CacheRegistry.pin]], so with a checkpoint dir set
+    * on the SparkContext the edge list and every round's label frame
+    * are RELIABLE checkpoints (an executor loss mid-loop costs at most the
+    * round in flight), and without one they are local checkpoints,
+    * whose blocks die with their executor — cheap, and the documented
+    * fragility on a real cluster (lineage is truncated; nothing can
+    * recompute the lost blocks).
     *
     * Requires `maxIters >= 1` (so do the public callers dedupGroups /
     * dedupIncremental / foldClosure): a 0-round budget has no
     * identity-labels degenerate form since the r14 first-round fusion.
+    * Converged means two consecutive rounds with the same label sum
+    * (or no edges at all); `maxIters` rounds without that throws
+    * IllegalStateException naming the rounds run.
     */
-  private def propagateMin(edges: DataFrame, maxIters: Int,
-      checkpointDir: Option[String] = None,
-      reliableEvery: Int = 10): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+  private def propagateMin(edges: DataFrame, maxIters: Int): DataFrame = {
     require(maxIters >= 1, s"propagateMin needs >= 1 round, got $maxIters")
-    // plainLocalCheckpoint, NOT Dataset.localCheckpoint: the round-r
-    // plan references the round-(r−1) checkpoint twice (halving
-    // self-join), and Dataset.localCheckpoint's origin-metadata
-    // capture forks through that chain — wrap cost measured DOUBLING
-    // per round (2^rounds; 541 s merge-heavy fold at 200k docs, loop
-    // execution itself ~1 s/round). See bridge.plainLocalCheckpoint.
-    def pinRound(df: DataFrame, round: Int): DataFrame =
-      if (checkpointDir.isDefined && round % reliableEvery == 0)
-        pinReliable(df, checkpointDir)
-      else org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(df)
     // r14 (guide §2.4): round 1 used to join the edges against an
     // IDENTITY label frame (label(x) = x, itself a distinct + eager
     // checkpoint) — that join is a no-op by construction, so the first
     // round now reads min(id1, min id2) straight off the edge list:
     // the round-0 distinct, its checkpoint, and round 1's label join
     // (two exchanges + one pinned frame) disappear; rounds 2+ are
-    // unchanged. `labels == null` marks the fused first round.
-    var labels: DataFrame = null
-    var prevSum: java.math.BigInteger = null
-    var converged = false
-    var iter = 0
-    // hoisted: the env lookup (and the timer it gates) must not run
-    // per round in the hot loop
-    val debugLabels = sys.env.contains("GRAFT_DEBUG_LABELS")
-    while (!converged && iter < maxIters) {
-      val roundT0 = if (debugLabels) System.nanoTime() else 0L
-      val cand = org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
-        if (labels == null)
-          // fused round 1: every participating node's neighbors still
-          // carry their own ids, so min-of-neighbors = min(id2) and
-          // the candidate label is least(self, min neighbor) — the
-          // identical frame the identity-join round produced
-          edges.groupBy(col("id1").as("doc_id"))
-            .agg(min(col("id2")).as("nbr_min"))
-            .select(col("doc_id"),
-              least(col("doc_id"), col("nbr_min")).as("component"))
-        else {
-          val nbrMin = edges.as("e")
-            .join(labels.as("l"), col("e.id2") === col("l.doc_id"))
-            .groupBy(col("e.id1").as("doc_id"))
-            .agg(min(col("l.component")).as("nbr_min"))
-          labels.join(nbrMin, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              least(col("component"), coalesce(col("nbr_min"), col("component")))
-                .as("component"))
+    // unchanged. The state is (labels, label sum): no labels before
+    // the fused first round, no sum when a round has no rows.
+    type Labels = (Option[DataFrame], Option[java.math.BigInteger])
+    val run = graft.CacheRegistry.rounds[Labels]("closure", maxIters)(
+        (None, None))(
+      step = { case ((labels, _), _) =>
+        val cand = graft.CacheRegistry.pin(labels match {
+          case None =>
+            // fused round 1: every participating node's neighbors still
+            // carry their own ids, so min-of-neighbors = min(id2) and
+            // the candidate label is least(self, min neighbor) — the
+            // identical frame the identity-join round produced
+            edges.groupBy(col("id1").as("doc_id"))
+              .agg(min(col("id2")).as("nbr_min"))
+              .select(col("doc_id"),
+                least(col("doc_id"), col("nbr_min")).as("component"))
+          case Some(l) =>
+            val nbrMin = edges.as("e")
+              .join(l.as("l"), col("e.id2") === col("l.doc_id"))
+              .groupBy(col("e.id1").as("doc_id"))
+              .agg(min(col("l.component")).as("nbr_min"))
+            l.join(nbrMin, Seq("doc_id"), "left")
+              .select(col("doc_id"),
+                least(col("component"), coalesce(col("nbr_min"), col("component")))
+                  .as("component"))
         })
-      // pointer halving: follow one hop of the label chain. Every
-      // label IS a participating node id, so the lookup self-join
-      // always resolves; least() keeps monotonicity.
-      val halved = cand.join(
-        cand.select(col("doc_id").as("component"),
-          col("component").as("parent")),
-        Seq("component"), "left")
-        .select(col("doc_id"),
-          least(col("component"), coalesce(col("parent"), col("component")))
-            .as("component"))
-      // r15 (guide §1.2): the convergence probe rides the checkpoint's
-      // own materialization job (plainLocalCheckpointSumLong) — the
-      // loop was 3 sequential jobs per round (cand pin, next pin, sum
-      // probe) and at gate scale per-round latency, not throughput,
-      // dominates (VERDICT r14's 8-vs-32-cpu ratios ≈ 1). Reliable
-      // rounds keep the separate decimal-sum job (the DFS checkpoint
-      // path has no fused action); both paths produce the same exact
-      // integer, so convergence decisions are unchanged.
-      val reliable =
-        checkpointDir.isDefined && (iter + 1) % reliableEvery == 0
-      val (next, s): (DataFrame, Option[java.math.BigInteger]) =
-        if (reliable) {
-          val p = pinRound(halved, iter + 1)
-          val dec = p.agg(sum(col("component").cast(DecimalType(38, 0))))
-            .head.getDecimal(0)
-          (p, Option(dec).map(_.toBigIntegerExact))
-        } else {
-          val (p, nRows, bi) = org.apache.spark.sql.graftx.bridge
-            .plainLocalCheckpointSumLong(halved, "component")
-          (p, if (nRows == 0) None else Some(bi))
-        }
-      // next is materialized (eager checkpoint): this round's cand and
-      // the previous labels are dead weight from here on
-      graft.CacheRegistry.releaseCheckpoint(cand)
-      if (labels != null) graft.CacheRegistry.releaseCheckpoint(labels)
-      // empty sum ⟺ zero rows ⟺ no edges at all: converged by
-      // definition (without this, an edge-free corpus burned all
-      // maxIters rounds on empty frames)
-      converged = s.isEmpty ||
-        (prevSum != null && s.get.equals(prevSum))
-      prevSum = s.orNull
-      labels = next
-      iter += 1
-      if (debugLabels)
-        println(f"[labels] round $iter wall=${(System.nanoTime() - roundT0) / 1e9}%.2fs sum=$s converged=$converged")
+        // pointer halving: follow one hop of the label chain. Every
+        // label IS a participating node id, so the lookup self-join
+        // always resolves; least() keeps monotonicity.
+        val halved = cand.join(
+          cand.select(col("doc_id").as("component"),
+            col("component").as("parent")),
+          Seq("component"), "left")
+          .select(col("doc_id"),
+            least(col("component"), coalesce(col("parent"), col("component")))
+              .as("component"))
+        // r15 (guide §1.2): the convergence probe rides the pin's own
+        // materialization job — the loop was 3 sequential jobs per
+        // round (cand pin, next pin, sum probe) and at gate scale
+        // per-round latency, not throughput, dominates (VERDICT r14's
+        // 8-vs-32-cpu ratios ≈ 1)
+        val (next, nRows, sum) =
+          graft.CacheRegistry.pinSumLong(halved, "component")
+        // next is materialized: this round's cand is dead weight (the
+        // previous round's labels go when this round ends)
+        graft.CacheRegistry.releaseCheckpoint(cand)
+        (Some(next), if (nRows == 0) None else Some(sum))
+      },
+      // labels only ever decrease, so the sum changes iff any label
+      // changed; an empty sum means no edges at all (without this, an
+      // edge-free corpus burned all maxIters rounds on empty frames)
+      converged = (prev, next) => next._2.isEmpty || next._2 == prev._2)
+    val labels = run.state._1.get
+    if (!run.converged) {
+      graft.CacheRegistry.releaseCheckpoint(labels)
+      throw new IllegalStateException(s"closure did not converge: " +
+        s"${run.rounds} rounds run, maxIters = $maxIters")
     }
-    graft.CacheRegistry.registerCheckpoint(labels)
     labels
   }
 
@@ -1128,12 +1070,13 @@ object DedupOps {
     * over collapsed node ids = min doc_id of the merged component
     * because each prior canonical IS its component's min.
     *
-    * Requires `maxIters >= 1`, as [[dedupGroups]] does.
+    * Round cap as [[dedupGroups]]: `maxIters >= 2` for any input
+    * with a pair; reaching it unconverged throws
+    * IllegalStateException.
     */
   def dedupIncremental(corpus: DataFrame, priorLabels: => DataFrame,
       batch: DataFrame, minJaccard: Double = 0.7,
-      maxIters: Int = 50, checkpointDir: Option[String] = None,
-      reliableEvery: Int = 10): DataFrame = {
+      maxIters: Int = 50): DataFrame = {
     val cols = Seq("doc_id", "source", "text").map(col)
     val union = corpus.select(cols: _*).unionByName(batch.select(cols: _*))
     // r15 (guide §2.6): `priorLabels` is BY-NAME — callers typically
@@ -1147,12 +1090,10 @@ object DedupOps {
     // lets pair-generation caches release, with this pin's scope,
     // before the closure starts.
     val (pinnedPairs, prior) = inParallel(
-      graft.CacheRegistry.scoped(pinReliable(ngramJaccardPrefixAgainst(union,
-        batch.select("doc_id"), minJaccard).select("id1", "id2"),
-        checkpointDir)),
+      graft.CacheRegistry.pin(ngramJaccardPrefixAgainst(union,
+        batch.select("doc_id"), minJaccard).select("id1", "id2")),
       priorLabels)
-    foldClosure(union.select(col("doc_id")), prior, pinnedPairs,
-      maxIters, checkpointDir, reliableEvery)
+    foldClosure(union.select(col("doc_id")), prior, pinnedPairs, maxIters)
   }
 
   /** The collapsed-closure FOLD kernel shared by [[dedupIncremental]]
@@ -1165,9 +1106,8 @@ object DedupOps {
     * the collapsed edge list is pinned, before round 1.
     */
   private[operators] def foldClosure(unionIds: DataFrame,
-      priorLabels: DataFrame, pairs: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None,
-      reliableEvery: Int = 10): DataFrame = {
+      priorLabels: DataFrame, pairs: DataFrame,
+      maxIters: Int = 50): DataFrame = {
     val rep = priorLabels.select(col("doc_id"), col("component").as("rep"))
     // collapse endpoints to prior-component nodes and drop
     // intra-component pairs (already merged); registering `pairs` in
@@ -1181,7 +1121,7 @@ object DedupOps {
         .select(coalesce(col("r1"), col("id1")).as("id1"),
           coalesce(col("r2"), col("id2")).as("id2"))
         .filter(col("id1") =!= col("id2")),
-      maxIters, checkpointDir, reliableEvery)
+      maxIters)
     // fan out: doc → its collapsed node → the node's new label (nodes
     // untouched by any new edge keep their prior component)
     val nodes = unionIds

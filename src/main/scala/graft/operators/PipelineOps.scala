@@ -54,29 +54,28 @@ object PipelineOps {
     // heavy derivation runs exactly ONCE and the stage frames rebuild
     // as scan ⋈ tiny pinned key-sets; same rows by construction
     // (inner joins on the identical, uniquely-keyed doc_id sets).
-    def pinKeys(df: DataFrame): DataFrame =
-      graft.CacheRegistry.registerCheckpoint(
-        org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(df))
+    // Each pin releases the caches its own stage registered.
+    import graft.CacheRegistry.pin
     // 1. row-local gates — intersect the two keep-sets first (keys
     // only), then join the corpus once instead of twice (§2.3)
     val qKeep = TextOps.quality(documents)
       .filter(col("keep")).select("doc_id")
     val rKeep = TextOps.repetition(documents)
       .filter(col("keep")).select("doc_id")
-    val k1 = pinKeys(qKeep.join(rKeep, "doc_id"))
+    val k1 = pin(qKeep.join(rKeep, "doc_id"))
     val s1 = documents.join(k1, "doc_id")
     // 2. exact dedup among survivors
-    val k2 = pinKeys(DedupOps.exactDedup(s1)
+    val k2 = pin(DedupOps.exactDedup(s1)
       .select(col("keep_id").as("doc_id")))
     val s2 = s1.join(k2, "doc_id")
     // 3. near-dup canonical election among survivors (dedupGroups
     // directly: dedupApply's join-back against the corpus would be
     // paid only to project everything but doc_id away again)
-    val canon = pinKeys(labels.getOrElse(DedupOps.dedupGroups(s2, tau))
+    val canon = pin(labels.getOrElse(DedupOps.dedupGroups(s2, tau))
       .filter(col("is_canonical")).select("doc_id"))
     val s3 = s2.join(canon, "doc_id")
     // 4. decontamination vs the fixed eval set
-    val dKeep = pinKeys(DedupOps.decontaminate(s3, benchmark, maxOverlap)
+    val dKeep = pin(DedupOps.decontaminate(s3, benchmark, maxOverlap)
       .filter(col("keep")).select("doc_id"))
     val s4 = s3.join(dKeep, "doc_id")
     // 5. split assignment

@@ -458,11 +458,9 @@ object SimilarityOps {
     // real cluster already has.
     val projCols = array((0 until numTables * P).map(i =>
       planeProj(col("embedding").cast("array<double>"), i)): _*)
-    val e = graft.CacheRegistry.registerCheckpoint(
-      org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
-        embeddings.repartition(col("vec_id"))
-          .select(col("vec_id"), col("embedding"),
-            norm(col("embedding")).as("nrm"), projCols.as("projs"))))
+    val e = graft.CacheRegistry.pin(embeddings.repartition(col("vec_id"))
+      .select(col("vec_id"), col("embedding"),
+        norm(col("embedding")).as("nrm"), projCols.as("projs")))
     def bucketT(t: Int): Column =
       (0 until P).map { j =>
         when(element_at(col("projs"), t * P + j + 1) > 0, lit(1 << j))
@@ -865,14 +863,15 @@ object SimilarityOps {
     kmeansTrain(embeddings, k, iters)._1
 
   /** N-round Lloyd training (VERDICT r9 #7 — the statically-nested
-    * loop made parametric): each round's assignment and centroid
-    * table are eagerly pinned via the label loop's
-    * `plainLocalCheckpoint` (round r+1's plan references a LEAF, not
-    * round r's whole plan — without this the lineage NESTS per round
-    * and analysis cost grows with the round count, the same disease
-    * the dedup loop had), prior rounds' blocks released the moment
-    * the next round materializes, final tables registered for harness
-    * release. With `trackChanges` the per-round ASSIGNMENT-CHANGE
+    * loop made parametric), run in [[graft.CacheRegistry.rounds]]:
+    * each round's assignment and centroid table are eagerly pinned
+    * (round r+1's plan references a LEAF, not round r's whole plan —
+    * without this the lineage NESTS per round and analysis cost grows
+    * with the round count, the same disease the dedup loop had), a
+    * round's pins are released once the next round has pinned its
+    * centroids, and the final table passes to the caller's scope.
+    * Runs exactly `iters` rounds; `iters = 0` returns the seed
+    * centroids. With `trackChanges` the per-round ASSIGNMENT-CHANGE
     * count — the standard Lloyd convergence diagnostic (stop when it
     * hits ~0) — is published alongside: entry r counts vectors whose
     * cluster differs between update rounds r and r+1 (length
@@ -889,8 +888,7 @@ object SimilarityOps {
       trackChanges: Boolean = false): (DataFrame, Seq[Long]) = {
     import org.apache.spark.sql.types.DecimalType
     require(k >= 2 && iters >= 0, "need k >= 2 clusters, iters >= 0")
-    val bridge = org.apache.spark.sql.graftx.bridge
-    import graft.CacheRegistry.{releaseCheckpoint => release}
+    import graft.CacheRegistry.{pin, releaseCheckpoint}
     val e = embeddings.select(col("vec_id"), col("embedding"))
     def update(asg: DataFrame): DataFrame = {
       val q = floor(col("val").cast("double") * lit(1048576.0))
@@ -904,28 +902,23 @@ object SimilarityOps {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
           x => x.getField("cval")).as("cemb"))
     }
-    var cents = e.filter(col("vec_id") < k)
+    val seeds = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"),
         transform(col("embedding"), v => v.cast("double")).as("cemb"))
-    var prevAsg: DataFrame = null
     val changes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (_ <- 1 to iters) {
-      val asg = bridge.plainLocalCheckpoint(
-        kmeansAssign(e, cents).select(col("vec_id"), col("cluster")))
-      if (trackChanges && prevAsg != null)
-        changes += asg.join(
-            prevAsg.select(col("vec_id"), col("cluster").as("prev")),
-            "vec_id")
-          .filter(col("cluster") =!= col("prev")).count()
-      val next = bridge.plainLocalCheckpoint(update(asg))
-      release(cents)
-      if (prevAsg != null) release(prevAsg)
-      if (trackChanges) prevAsg = asg else release(asg)
-      cents = next
+    // state: (centroids, this round's assignment when tracking changes)
+    val run = graft.CacheRegistry.rounds("kmeans", iters)(
+        (seeds, Option.empty[DataFrame])) { case ((cents, prevAsg), _) =>
+      val asg = pin(kmeansAssign(e, cents).select(col("vec_id"), col("cluster")))
+      prevAsg.foreach(p => changes += asg.join(
+          p.select(col("vec_id"), col("cluster").as("prev")), "vec_id")
+        .filter(col("cluster") =!= col("prev")).count())
+      val next = pin(update(asg))
+      if (trackChanges) (next, Some(asg))
+      else { releaseCheckpoint(asg); (next, None) }
     }
-    if (prevAsg != null) release(prevAsg)
-    graft.CacheRegistry.registerCheckpoint(cents)
-    (cents, changes.toSeq)
+    run.state._2.foreach(releaseCheckpoint)
+    (run.state._1, changes.toSeq)
   }
 
   def embKmeans(embeddings: DataFrame, k: Int = 8,
@@ -1044,8 +1037,6 @@ object SimilarityOps {
       iters: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     require(ksub >= 2 && iters >= 0, "need ksub >= 2 codes, iters >= 0")
-    val bridge = org.apache.spark.sql.graftx.bridge
-    import graft.CacheRegistry.{releaseCheckpoint => release}
     def update(asg: DataFrame): DataFrame = {
       val q = floor(col("val") * lit(1048576.0)).cast(DecimalType(38, 0))
       subv.join(asg, Seq("vec_id", "sub"))
@@ -1058,16 +1049,12 @@ object SimilarityOps {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
           x => x.getField("cval")).as("cb"))
     }
-    var cb = subv.filter(col("vec_id") < ksub)
+    val seeds = subv.filter(col("vec_id") < ksub)
       .select(col("sub"), col("vec_id").cast("int").as("code"),
         col("sv").as("cb"))
-    for (_ <- 1 to iters) {
-      val next = bridge.plainLocalCheckpoint(update(pqAssign(subv, cb)))
-      release(cb)
-      cb = next
-    }
-    graft.CacheRegistry.registerCheckpoint(cb)
-    cb
+    graft.CacheRegistry.rounds("pq", iters)(seeds) { (cb, _) =>
+      graft.CacheRegistry.pin(update(pqAssign(subv, cb)))
+    }.state
   }
 
   /** One PQ assignment: per (vec_id, sub), the codebook entry with the
@@ -1129,12 +1116,11 @@ object SimilarityOps {
   def knnIvfPqIndex(embeddings: DataFrame, kCells: Int = 8,
       iters: Int = 2, m: Int = 8, ksub: Int = 16,
       pqIters: Int = 2, dimHint: Int = 0): IvfPqIndex = {
-    val bridge = org.apache.spark.sql.graftx.bridge
+    import graft.CacheRegistry.pin
     // pinned once: training scans the normalized frame ~6 times (two
     // Lloyd loops + assignment + subvector build); re-normalizing per
     // scan would repeat the per-row dot each time
-    val e = bridge.plainLocalCheckpoint(normalized(embeddings))
-    graft.CacheRegistry.registerCheckpoint(e)
+    val e = pin(normalized(embeddings))
     // dimHint skips the driver-side probe when the caller already
     // knows the dimensionality (ADVICE r12: the composed knnIvfPq ran
     // the probe twice per call — once here, once in the search half)
@@ -1145,13 +1131,11 @@ object SimilarityOps {
 
     // coarse quantizer + assignment (C54/C55 machinery, verbatim)
     val cents = kmeansCentroids(e, kCells, iters)
-    val asg = bridge.plainLocalCheckpoint(
-      kmeansAssign(e, cents).select(col("vec_id"), col("cluster")))
-    graft.CacheRegistry.registerCheckpoint(asg)
+    val asg = pin(kmeansAssign(e, cents).select(col("vec_id"), col("cluster")))
 
     // residual subvectors in long form — pinned once, scanned by every
     // PQ training round and the final code assignment
-    val subv = bridge.plainLocalCheckpoint(
+    val subv = pin(
       e.join(asg, "vec_id")
         .join(broadcast(cents), "cluster")
         .select(col("vec_id"),
@@ -1160,7 +1144,6 @@ object SimilarityOps {
           struct(lit(j).as("sub"),
             slice(col("r"), j * dsub + 1, dsub).as("sv"))): _*)).as("s"))
         .select(col("vec_id"), col("s.sub").as("sub"), col("s.sv").as("sv")))
-    graft.CacheRegistry.registerCheckpoint(subv)
 
     val cb = pqTrain(subv, ksub, pqIters)
     // the compressed index: m codes per vector beside its cell
@@ -1318,9 +1301,7 @@ object SimilarityOps {
       case None =>
         DedupOps.inParallel(
           knnIvfPq(embeddings, nQueries, k),
-          graft.CacheRegistry.registerCheckpoint(
-            org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
-              knnBrute(embeddings, nQueries, k))))
+          graft.CacheRegistry.pin(knnBrute(embeddings, nQueries, k)))
     }
     // r15 single-pass gate tail (see knnLshRecall)
     truth.join(
@@ -1557,9 +1538,9 @@ object SimilarityOps {
     // costs one pass over 2-long rows and foldClosure releases it once
     // the collapsed edge list is pinned.
     val (pinnedPairs, prior) = DedupOps.inParallel(
-      candidates.getOrElse(
+      graft.CacheRegistry.pin(candidates.getOrElse(
         embeddingNearDupsAgainst(union, batch.select("vec_id"), minCosine,
-          maxExactRows)).localCheckpoint(true),
+          maxExactRows))),
       priorLabels)
     val out = DedupOps.foldClosure(
       union.select(col("vec_id").as("doc_id")),
@@ -1654,34 +1635,34 @@ object SimilarityOps {
     * Determinism: relevance is IVF's round-3 sim; pairwise penalty
     * cosines round to 6; ties break to the smaller c_id via the
     * max_by struct — the oracle computes the identical rounded values,
-    * so the greedy trajectory is engine-exact.
+    * so the greedy trajectory is engine-exact. Runs exactly k − 1
+    * greedy rounds after the relevance pick, in
+    * [[graft.CacheRegistry.rounds]]: only the final selection outlives
+    * the call.
     */
   def mmrRerank(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCand: Int = 20, lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && k <= nCand, s"need 1 <= k=$k <= nCand=$nCand")
     require(lambda >= 0.0 && lambda <= 1.0)
-    val bridge = org.apache.spark.sql.graftx.bridge
+    import graft.CacheRegistry.pin
     val emb = embeddings.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"), norm(col("embedding")).as("c_norm"))
     // candidate frame: (q_id, c_id, rel, c_emb, c_norm) — pinned once;
-    // every greedy round reads this LEAF, not the IVF plan again
-    val cand = bridge.plainLocalCheckpoint(
-      knnIvf(embeddings, nQueries, nCand)
-        .select(col("q_id"), col("c_id"), col("sim").as("rel"))
-        .join(emb, "c_id"))
-    graft.CacheRegistry.registerCheckpoint(cand)
+    // every greedy round reads this LEAF, not the IVF plan again, and
+    // it is released once the last round has pinned its selection
+    val cand = pin(knnIvf(embeddings, nQueries, nCand)
+      .select(col("q_id"), col("c_id"), col("sim").as("rel"))
+      .join(emb, "c_id"))
     def pick(scored: DataFrame, scoreCol: Column): DataFrame =
       scored.groupBy("q_id")
         .agg(max_by(struct(col("c_id"), col("rel"), col("score")),
           struct(scoreCol, negate(col("c_id")))).as("w"))
         .select(col("q_id"), col("w.c_id").as("c_id"),
           col("w.rel").as("rel"), col("w.score").as("score"))
-    // round 1: pure relevance
-    var selected = bridge.plainLocalCheckpoint(
-      pick(cand.withColumn("score", col("rel")), col("rel"))
-        .withColumn("mmr_rank", lit(1L)))
-    graft.CacheRegistry.registerCheckpoint(selected)
-    for (r <- 2 to k) {
+    // round 0 picks rank 1 by pure relevance; round r picks rank r + 1
+    val run = graft.CacheRegistry.rounds("mmr", k - 1)(
+        pin(pick(cand.withColumn("score", col("rel")), col("rel"))
+          .withColumn("mmr_rank", lit(1L)))) { (selected, r) =>
       val sel = selected.select(col("q_id"), col("c_id").as("s_id"))
         .join(emb.select(col("c_id").as("s_id"),
           col("c_emb").as("s_emb"), col("c_norm").as("s_norm")), "s_id")
@@ -1696,13 +1677,11 @@ object SimilarityOps {
         .withColumn("score",
           round(lit(lambda) * col("rel")
             - lit(1.0 - lambda) * col("max_pen"), 6))
-      val next = bridge.plainLocalCheckpoint(
-        selected.unionByName(
-          pick(scored, col("score")).withColumn("mmr_rank", lit(r.toLong))))
-      graft.CacheRegistry.registerCheckpoint(next)
-      selected = next
+      pin(selected.unionByName(
+        pick(scored, col("score")).withColumn("mmr_rank", lit(r + 1L))))
     }
-    selected.select(col("q_id"), col("mmr_rank"), col("c_id"),
+    graft.CacheRegistry.releaseCheckpoint(cand)
+    run.state.select(col("q_id"), col("mmr_rank"), col("c_id"),
       col("rel"), round(col("score"), 6).as("score"))
   }
 
@@ -1760,61 +1739,48 @@ object SimilarityOps {
     * running min against the ONE newly added center, so work per
     * round is n·1 dots, not n·k) — followed by a 1-row max_by argmax.
     * k scans total, zero joins wider than the broadcast, nothing
-    * quadratic; the running-min frame is pinned per round
-    * (plainLocalCheckpoint) exactly like the Lloyd loop.
+    * quadratic; the running-min frame is pinned per round in
+    * [[graft.CacheRegistry.rounds]] exactly like the Lloyd loop, so
+    * only the final center set outlives the call's last round. Runs
+    * exactly k − 1 rounds after the first center.
     */
   def kCenterSample(embeddings: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 1 && k <= 64, s"k-center rounds is a small dial, got $k")
-    val bridge = org.apache.spark.sql.graftx.bridge
+    import graft.CacheRegistry.pin
     val base = embeddings.select(col("vec_id"),
       col("embedding").as("emb"), norm(col("embedding")).as("nrm"))
-    val first = base
-      .agg(min(col("vec_id")).as("vec_id"))
-      .withColumn("round", lit(1L)).withColumn("min_dist", lit(0.0))
-    var centers = bridge.plainLocalCheckpoint(
-      first.select(col("round"), col("vec_id"), col("min_dist")))
-    graft.CacheRegistry.registerCheckpoint(centers)
-    // running min-distance of every vector to the selected set
-    var state = bridge.plainLocalCheckpoint(
-      base.crossJoin(broadcast(
-          centers.select(col("vec_id").as("s_id"))
-            .join(base.select(col("vec_id").as("s_id"),
-              col("emb").as("s_emb"), col("nrm").as("s_nrm")), "s_id")))
-        .select(col("vec_id"), col("emb"), col("nrm"),
-          (lit(1.0) - round(dot(col("emb"), col("s_emb"))
-            / (col("nrm") * col("s_nrm")), 6)).as("min_dist")))
-    graft.CacheRegistry.registerCheckpoint(state)
-    for (r <- 2 to k) {
+    def centerEmb(centers: DataFrame): DataFrame =
+      broadcast(centers.select(col("vec_id").as("s_id"))
+        .join(base.select(col("vec_id").as("s_id"),
+          col("emb").as("s_emb"), col("nrm").as("s_nrm")), "s_id"))
+    val dist = lit(1.0) - round(dot(col("emb"), col("s_emb"))
+      / (col("nrm") * col("s_nrm")), 6)
+    // round 0 selects center 1 (the lowest vec_id) and every vector's
+    // running min-distance to it; round r selects center r + 1
+    val run = graft.CacheRegistry.rounds("kcenter", k - 1)({
+      val centers = pin(base.agg(min(col("vec_id")).as("vec_id"))
+        .select(lit(1L).as("round"), col("vec_id"), lit(0.0).as("min_dist")))
+      (centers, pin(base.crossJoin(centerEmb(centers))
+        .select(col("vec_id"), col("emb"), col("nrm"), dist.as("min_dist"))))
+    }) { case ((centers, state), r) =>
       val nxt = state
         .join(centers.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .groupBy()
         .agg(max_by(struct(col("vec_id"), col("min_dist")),
           struct(col("min_dist"), negate(col("vec_id")))).as("w"))
-        .select(lit(r.toLong).as("round"), col("w.vec_id").as("vec_id"),
+        .select(lit(r + 1L).as("round"), col("w.vec_id").as("vec_id"),
           col("w.min_dist").as("min_dist"))
-      val nextCenters = bridge.plainLocalCheckpoint(
-        centers.unionByName(nxt))
-      graft.CacheRegistry.registerCheckpoint(nextCenters)
-      centers = nextCenters
-      if (r < k) {
-        // fold the ONE new center into the running min (Gonzalez) —
-        // read it from the PINNED centers frame, not nxt's plan (a
-        // second evaluation would re-run the argmax scan)
-        val newC = broadcast(nextCenters
-          .filter(col("round") === r.toLong).select(col("vec_id").as("s_id"))
-          .join(base.select(col("vec_id").as("s_id"),
-            col("emb").as("s_emb"), col("nrm").as("s_nrm")), "s_id"))
-        val nextState = bridge.plainLocalCheckpoint(
-          state.crossJoin(newC)
-            .select(col("vec_id"), col("emb"), col("nrm"),
-              least(col("min_dist"),
-                lit(1.0) - round(dot(col("emb"), col("s_emb"))
-                  / (col("nrm") * col("s_nrm")), 6)).as("min_dist")))
-        graft.CacheRegistry.registerCheckpoint(nextState)
-        state = nextState
-      }
+      val next = pin(centers.unionByName(nxt))
+      // fold the ONE new center into the running min (Gonzalez) — read
+      // it from the PINNED centers frame, not nxt's plan (a second
+      // evaluation would re-run the argmax scan); the last round has
+      // no next round to read it
+      (next, if (r == k - 1) state else pin(state
+        .crossJoin(centerEmb(next.filter(col("round") === r + 1L)))
+        .select(col("vec_id"), col("emb"), col("nrm"),
+          least(col("min_dist"), dist).as("min_dist"))))
     }
-    centers.select(col("round"), col("vec_id"),
+    run.state._1.select(col("round"), col("vec_id"),
       round(col("min_dist"), 6).as("min_dist"))
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Text-analysis operators over the `documents` table: tokenization,
   * language ID, quality scoring, token counting, fingerprinting.
@@ -999,12 +1000,14 @@ object TextOps {
     * frequency, the number of merges actually applied, and the vocab
     * size after the rewrite.
     *
-    * Loop mechanics are the kmeansTrain parametric-round pattern: the
-    * rewritten long-form token table is eagerly pinned per round via
-    * plainLocalCheckpoint (round r+1 reads a LEAF, not round r's whole
-    * plan — lineage must not nest), the 1-row top-pair and stats
-    * frames are pinned the same way, and everything registers with
-    * CacheRegistry for harness release.
+    * Loop mechanics are the kmeansTrain parametric-round pattern in
+    * [[graft.CacheRegistry.rounds]], exactly `rounds` rounds: the
+    * rewritten long-form token table is eagerly pinned per round
+    * (round r+1 reads a LEAF, not round r's whole plan — lineage must
+    * not nest) and so is the ≤`batch`-row top-pair frame, which is
+    * released once its round's stats are read; the ≤`batch`-row
+    * stats rows are collected to the driver, so only the final token
+    * table outlives the last round.
     *
     * Scale shape per round: one (a, b) partial-agg pair count + a
     * TakeOrdered top-1, then the rewrite = one window pass per doc
@@ -1081,9 +1084,8 @@ object TextOps {
       rounds: Int = 2): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"BPE merge rounds is a small fixed dial, got $rounds")
-    val bridge = org.apache.spark.sql.graftx.bridge
-    var cur = bpeTokens(documents)
-    for (r <- 1 to rounds) {
+    graft.CacheRegistry.rounds("bpe_apply", rounds)(bpeTokens(documents)) {
+        (cur, r) =>
       // the frozen round-r pair set: "a b" splits on the single
       // space bpeTrain's publisher writes (tokens never contain
       // spaces — they come from a whitespace split; merged tokens
@@ -1091,30 +1093,21 @@ object TextOps {
       val sel = merges.filter(col("round") === r.toLong)
         .select(element_at(split(col("pair"), " ", 2), 1).as("a"),
           element_at(split(col("pair"), " ", 2), 2).as("b"))
-      val next = bridge.plainLocalCheckpoint(
-        bpeRewrite(bpeWithNext(cur), sel).drop("mp"))
-      graft.CacheRegistry.registerCheckpoint(next)
-      graft.CacheRegistry.releaseCheckpoint(cur)
-      cur = next
-    }
-    cur
+      graft.CacheRegistry.pin(bpeRewrite(bpeWithNext(cur), sel).drop("mp"))
+    }.state
   }
 
   private val bpeDoc =
     org.apache.spark.sql.expressions.Window.partitionBy("doc_id").orderBy("pos")
 
   /** The corpus as a pinned long-form token table (doc_id, pos, tok),
-    * `pos` 1-based, registered with CacheRegistry.
+    * `pos` 1-based.
     */
-  private def bpeTokens(documents: DataFrame): DataFrame = {
-    val t = org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
-      documents.select(col("doc_id"),
-          posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("tok")))
-    graft.CacheRegistry.registerCheckpoint(t)
-    t
-  }
+  private def bpeTokens(documents: DataFrame): DataFrame =
+    graft.CacheRegistry.pin(documents.select(col("doc_id"),
+        posexplode(tokens(col("text"))).as(Seq("p0", "tok")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
+        col("tok")))
 
   /** A token table with each position's successor token as `nxt`. */
   private def bpeWithNext(toks: DataFrame): DataFrame =
@@ -1179,15 +1172,13 @@ object TextOps {
       s"BPE merge rounds is a small fixed dial, got $rounds")
     require(batch >= 1 && batch <= 64,
       s"BPE merges per round is a small fixed dial, got $batch")
-    val bridge = org.apache.spark.sql.graftx.bridge
-    // curCk is the release HANDLE (the raw checkpoint leaf — from
-    // round 1 on, `cur` is a projection over it and checkpointRdd
-    // can't unpin through a Project)
-    var curCk = bpeTokens(documents)
-    var cur: DataFrame = curCk
-    var stats: DataFrame = null
-    for (r <- 1 to rounds) {
-      val big = bpeWithNext(cur)
+    import graft.CacheRegistry.{pin, releaseCheckpoint}
+    val stats = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var statsSchema: org.apache.spark.sql.types.StructType = null
+    // the state is the pinned rewritten table, `mp` column included
+    val run = graft.CacheRegistry.rounds("bpe", rounds)(bpeTokens(documents)) {
+        (prev, r) =>
+      val big = bpeWithNext(prev.select(col("doc_id"), col("pos"), col("tok")))
       // top-`batch` candidates by (n DESC, a, b) via TakeOrdered, then
       // the NON-RECURSIVE disjointness filter: a candidate survives
       // iff it shares no token with ANY higher-ranked candidate — a
@@ -1210,14 +1201,12 @@ object TextOps {
               "left_anti")
             .select(col("a"), col("b"), col("n"))
         }
-      val top = bridge.plainLocalCheckpoint(sel)
-      graft.CacheRegistry.registerCheckpoint(top)
-      val next = bridge.plainLocalCheckpoint(bpeRewrite(big, top))
-      graft.CacheRegistry.registerCheckpoint(next)
-      // per-selected-pair stats rows — both inputs (top, next) are
-      // pinned leaves, so this costs two tiny scans of the checkpoint
-      val row = bridge.plainLocalCheckpoint(
-        top.join(next.filter(col("mp").isNotNull).groupBy("mp")
+      val top = pin(sel)
+      val next = pin(bpeRewrite(big, top))
+      // per-selected-pair stats rows (≤ batch of them), collected —
+      // both inputs (top, next) are pinned leaves, so this costs two
+      // tiny scans of the checkpoint
+      val row = top.join(next.filter(col("mp").isNotNull).groupBy("mp")
             .agg(count(lit(1)).as("n_merges")),
             concat_ws(" ", col("a"), col("b")) === col("mp"), "left")
           .crossJoin(broadcast(
@@ -1225,14 +1214,14 @@ object TextOps {
           .select(lit(r).cast("long").as("round"),
             concat_ws(" ", col("a"), col("b")).as("pair"), col("n"),
             coalesce(col("n_merges"), lit(0L)).as("n_merges"),
-            col("vocab_size")))
-      graft.CacheRegistry.registerCheckpoint(row)
-      graft.CacheRegistry.releaseCheckpoint(curCk)
-      curCk = next
-      cur = next.select(col("doc_id"), col("pos"), col("tok"))
-      stats = if (stats == null) row else stats.unionByName(row)
+            col("vocab_size"))
+      stats ++= row.collect()
+      statsSchema = row.schema
+      releaseCheckpoint(top)
+      next
     }
-    (stats, cur)
+    (documents.sparkSession.createDataFrame(stats.asJava, statsSchema),
+      run.state.select(col("doc_id"), col("pos"), col("tok")))
   }
 
   /** `rows` with a 1-based long `rank` column first, numbered in

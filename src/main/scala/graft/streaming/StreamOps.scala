@@ -162,10 +162,8 @@ object StreamOps {
     // pin the final label table into executor blocks, then delete the
     // temp workspace (r15, VERDICT r14 #4) — the returned frame must
     // not lazily reference files this cleanup removes
-    val out = CacheRegistry.registerCheckpoint(
-      org.apache.spark.sql.graftx.bridge.plainLocalCheckpoint(
-        spark.read.parquet(s"$base/labels")
-          .select("doc_id", "component", "n_members", "is_canonical")))
+    val out = CacheRegistry.pin(spark.read.parquet(s"$base/labels")
+      .select("doc_id", "component", "n_members", "is_canonical"))
     deleteRecursively(spark, base)
     out
   }
@@ -305,19 +303,18 @@ object StreamOps {
           // snapshot: a foreachBatch frame is only valid inside this
           // call, and the labels written below must not reference the
           // labelsDir files they are about to replace
-          val b = pin(batch.select(cols.map(col): _*))
+          val b = CacheRegistry.pin(batch.select(cols.map(col): _*))
           val labels =
             if (!pathExists(spark, labelsDir)) first(b)
-            else {
-              val prior = spark.read.parquet(labelsDir).localCheckpoint(true)
+            else CacheRegistry.pin {
+              // the prior pin is released with this pin's build scope
+              val prior = CacheRegistry.pin(spark.read.parquet(labelsDir))
               val corpus =
                 if (pathExists(spark, corpusDir))
                   spark.read.parquet(corpusDir)
                     .filter(col("batch") < lit(id)).select(cols.map(col): _*)
                 else b.filter(lit(false)) // crash-window replay: no corpus yet
-              val out = incremental(corpus, prior, b).localCheckpoint(true)
-              CacheRegistry.releaseCheckpoint(prior)
-              out
+              incremental(corpus, prior, b)
             }
           labels.write.mode("overwrite").parquet(labelsDir)
           CacheRegistry.releaseCheckpoint(labels)
@@ -360,8 +357,9 @@ object StreamOps {
             s"latest-prior crash-replay read (got $retainBatches)")
         CacheRegistry.scoped {
           val spark = batch.sparkSession
-          val b = pin(batch.select(cols.map(col): _*))
-          val prior = latestSnapshot(spark, stateDir, before = id).map(pin)
+          val b = CacheRegistry.pin(batch.select(cols.map(col): _*))
+          val prior = latestSnapshot(spark, stateDir, before = id)
+            .map(CacheRegistry.pin(_))
           merge(b, prior).write.mode("overwrite").parquet(s"$stateDir/batch=$id")
           val fs = hadoopFs(spark, stateDir)
           fs.listStatus(new Path(stateDir)).map(_.getPath).filter { p =>
@@ -405,10 +403,6 @@ object StreamOps {
         (coalesce(col(s"${c}_0"), zero) + coalesce(col(c), zero)).as(c)
       }: _*)
   }
-
-  /** Eagerly checkpoint `df`, released with the open CacheRegistry scope. */
-  private def pin(df: DataFrame): DataFrame =
-    CacheRegistry.registerCheckpoint(df.localCheckpoint(true))
 
   private def hadoopFs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

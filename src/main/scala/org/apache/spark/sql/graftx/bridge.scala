@@ -43,7 +43,10 @@ object bridge extends org.apache.spark.internal.Logging {
       case _ => None
     }
 
-  /** Eager local checkpoint WITHOUT origin-metadata capture.
+  /** Eager checkpoint WITHOUT origin-metadata capture, local
+    * (executor blocks) or `reliable` (the SparkContext's checkpoint
+    * dir). Returns (pinned frame, row count, exact sum of the long
+    * column `sumLongCol`); without a column both are 0.
     *
     * `Dataset.localCheckpoint` wraps the pinned RDD via
     * `LogicalRDD.fromDataset`, which captures the origin plan's
@@ -59,42 +62,29 @@ object bridge extends org.apache.spark.internal.Logging {
     * runtime stats at the next exchange anyway), constant O(1) wrap
     * per round. Blocks release exactly like Dataset.localCheckpoint's
     * (same LogicalRDD shape for [[checkpointRdd]]).
+    *
+    * With `sumLongCol` (r15, guide §1.2) the checkpoint's
+    * materialization action ALSO folds that column into an exact
+    * per-partition sum, so an iterative loop that probes convergence
+    * off that sum (the dedup label loop) pays ONE job per pinned frame
+    * instead of checkpoint-job + sum-job; nulls are skipped like SQL
+    * `sum`, and a per-partition long spills to BigInteger on
+    * overflow. A reliable checkpoint writes its files in a second job
+    * after that action, as `Dataset.checkpoint` does.
     */
-  def plainLocalCheckpoint(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    plainLocalCheckpointImpl(df, None)._1
-
-  /** [[plainLocalCheckpoint]] fused with an exact column sum (r15,
-    * guide §1.2): the checkpoint's materialization action ALSO folds
-    * the named long column into an exact per-partition sum, so an
-    * iterative loop that probes convergence off that sum (the dedup
-    * label loop) pays ONE job per pinned frame instead of
-    * checkpoint-job + sum-job. Returns (pinned frame, row count,
-    * exact sum); nulls in the column are skipped like SQL `sum`.
-    * Overflow-safe at any scale: per-partition accumulation is a
-    * guarded long that spills to BigInteger.
-    */
-  def plainLocalCheckpointSumLong(df: org.apache.spark.sql.DataFrame,
-      colName: String)
+  def plainCheckpoint(df: org.apache.spark.sql.DataFrame, reliable: Boolean,
+      sumLongCol: Option[String] = None)
       : (org.apache.spark.sql.DataFrame, Long, java.math.BigInteger) = {
-    val (out, stats) = plainLocalCheckpointImpl(df,
-      Some(df.schema.fieldIndex(colName)))
-    (out, stats._1, stats._2)
-  }
-
-  private def plainLocalCheckpointImpl(df: org.apache.spark.sql.DataFrame,
-      sumLongCol: Option[Int])
-      : (org.apache.spark.sql.DataFrame, (Long, java.math.BigInteger)) = {
     import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
     val ds = df.asInstanceOf[
       org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val qe = ds.queryExecution
     val internalRdd = qe.toRdd.map(_.copy())
-    internalRdd.localCheckpoint()
+    if (reliable) internalRdd.checkpoint() else internalRdd.localCheckpoint()
     // one materializing action; with sumLongCol it also folds the
     // column's exact sum per partition (blocks populate either way —
     // the job consumes every partition through the cache layer)
-    val stats: (Long, java.math.BigInteger) = sumLongCol match {
+    val stats = sumLongCol.map(df.schema.fieldIndex) match {
       case None =>
         internalRdd.count()
         (0L, java.math.BigInteger.ZERO)
@@ -180,7 +170,8 @@ object bridge extends org.apache.spark.internal.Logging {
     }
     val lr = org.apache.spark.sql.execution.LogicalRDD(
       qe.analyzed.output, internalRdd, part, ordering)(ds.sparkSession)
-    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, lr), stats)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, lr),
+      stats._1, stats._2)
   }
 
   /** Declared output partitioning of a checkpoint leaf (spec access —

@@ -56,7 +56,7 @@ class CacheRegistrySpec extends SparkSpec {
     val df = spark.range(100)
       .select((col("id") % 10).as("k"), col("id").as("v"))
       .repartition(4, col("k"))
-    val ck = bridge.plainLocalCheckpoint(df)
+    val ck = CacheRegistry.pin(df)
     val part = bridge.checkpointPartitioning(ck)
       .getOrElse(fail("checkpoint did not produce a LogicalRDD leaf"))
     assert(part.toString.toLowerCase.contains("hashpartitioning"),
@@ -69,7 +69,76 @@ class CacheRegistrySpec extends SparkSpec {
     assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
       "groupBy on the carried partitioning key re-shuffled")
     // release the pinned blocks
-    bridge.checkpointRdd(ck).foreach(_.unpersist(true))
+    CacheRegistry.releaseCheckpoint(ck)
+  }
+
+  /** Is `df`'s checkpoint RDD still pinned in the block manager? */
+  private def pinned(df: org.apache.spark.sql.DataFrame): Boolean =
+    org.apache.spark.sql.graftx.bridge.checkpointRdd(df)
+      .exists(r => persistentRddIds.contains(r.id))
+
+  test("pin releases its build's caches and lands in the caller's scope") {
+    CacheRegistry.unpersistAll(blocking = true)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    var built: org.apache.spark.sql.DataFrame = null
+    val p = CacheRegistry.pin {
+      built = CacheRegistry.persist(spark.range(10).toDF("a"))
+      built.filter(col("a") < 5)
+    }
+    assert(built.storageLevel === none,
+      "a cache the build registered must be released once the pin is done")
+    assert(pinned(p) && p.count() === 5)
+    // inside nested scopes the pin belongs to the innermost one open
+    var inner: org.apache.spark.sql.DataFrame = null
+    val outer = CacheRegistry.scoped {
+      val o = CacheRegistry.pin(spark.range(3).toDF("b"))
+      CacheRegistry.scoped {
+        inner = CacheRegistry.pin {
+          built = CacheRegistry.persist(spark.range(7).toDF("c"))
+          built
+        }
+        assert(built.storageLevel === none && pinned(inner))
+      }
+      assert(!pinned(inner), "the pin must go with the scope that called pin")
+      assert(pinned(o))
+      o
+    }
+    assert(!pinned(outer))
+    assert(pinned(p), "a pin made outside any scope waits for the root sweep")
+    CacheRegistry.unpersistAll(blocking = true)
+    assert(!pinned(p))
+  }
+
+  test("rounds keeps round r-1 readable in round r and hands over only the last round") {
+    CacheRegistry.unpersistAll(blocking = true)
+    val states = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val run = CacheRegistry.rounds("test", 4)(
+        CacheRegistry.pin(spark.range(5).toDF("v"))) { (prev, r) =>
+      states += prev
+      // the previous round's pin is still readable here
+      assert(pinned(prev) && prev.count() === 5)
+      CacheRegistry.pin(prev.select((col("v") + r).as("v")))
+    }
+    states += run.state
+    assert(run.rounds === 4 && !run.converged)
+    assert(run.state.agg(sum("v")).head.getLong(0) === 10L + 5 * (1 + 2 + 3 + 4))
+    assert(states.init.forall(s => !pinned(s)),
+      "every round but the last must be released")
+    assert(pinned(run.state), "the last round's pin passes to the caller")
+    CacheRegistry.unpersistAll(blocking = true)
+    assert(!pinned(run.state))
+    // a converged step stops the loop
+    val conv = CacheRegistry.rounds("test", 10)(0)(
+      (s, _) => math.min(s + 1, 2), (prev, next) => prev == next)
+    assert(conv === CacheRegistry.Rounds(2, 3, converged = true))
+    // 0 rounds: init is the result, and its pins are the caller's
+    val zero = CacheRegistry.scoped {
+      val z = CacheRegistry.rounds("test", 0)(
+        CacheRegistry.pin(spark.range(2).toDF("v")))((s, _) => s)
+      assert(z.rounds === 0 && pinned(z.state) && z.state.count() === 2)
+      z.state
+    }
+    assert(!pinned(zero))
   }
 
   test("scoped releases only its own thread's pins; unpersistAll stays global") {

@@ -221,33 +221,40 @@ class DedupOpsSpec extends SparkSpec {
     assert(r(99L) === ((99L, 1L, true)))
   }
 
-  /** VERDICT r5 #8: the label loop's localCheckpoint blocks die with
-    * their executor on a real cluster; the opt-in `checkpointDir`
-    * routes the edge list and every `reliableEvery`-th round's label
-    * frame to RELIABLE checkpoint storage instead. Pin that (a) the
-    * loop completes with the reliable path exercised every round,
-    * (b) labels are identical to the default path, (c) checkpoint
-    * data actually landed in the dir.
+  /** The giant-component chain construction at tiny n: docs i and
+    * i+1 share 29 of 31 tokens (0.935 ≥ 0.7) and distance-3 falls
+    * below τ, so the path has diameter 20 and the closure needs
+    * several propagation rounds.
     */
-  test("dedupGroups with a reliable checkpointDir yields identical labels") {
-    import spark.implicits._
-    // chain long enough for several propagation rounds (path diameter
-    // 20): docs i and i+1 share 29 of 31 tokens (0.935 ≥ 0.7),
-    // distance-3 falls below τ — the giant-component chain
-    // construction, at tiny n
-    val docs = spark.range(20).select(
-      col("id").as("doc_id"), lit("s").as("source"),
-      concat_ws(" ", transform(
-        sequence(col("id") * 2, col("id") * 2 + 29),
-        j => concat(lit("w"), j.cast("string")))).as("text"))
+  private def chain20 = spark.range(20).select(
+    col("id").as("doc_id"), lit("s").as("source"),
+    concat_ws(" ", transform(
+      sequence(col("id") * 2, col("id") * 2 + 29),
+      j => concat(lit("w"), j.cast("string")))).as("text"))
+
+  /** VERDICT r5 #8: local checkpoint blocks die with their executor on
+    * a real cluster; with a checkpoint dir set on the session every
+    * pin is RELIABLE instead. Pin that (a) the closure and the Lloyd
+    * loop complete on the reliable path, (b) their results are
+    * identical to the local path, (c) checkpoint data actually landed
+    * in the dir.
+    */
+  test("a session checkpoint dir makes every pin reliable") {
+    val docs = chain20
+    val emb = Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_reliable_ckpt")
-    val reliable = DedupOps.dedupGroups(docs, 0.7,
-      checkpointDir = Some(dir.toString), reliableEvery = 1)
-    val default = DedupOps.dedupGroups(docs, 0.7)
-    assert(reliable.except(default).isEmpty
-      && default.except(reliable).isEmpty)
+    val (reliable, cents) = org.apache.spark.SessionCheckpointDir.withDir(
+        spark.sparkContext, dir.toString) {
+      (DedupOps.dedupGroups(docs, 0.7).collect().toSet,
+        graft.operators.SimilarityOps.kmeansTrain(emb, 4, 3)._1.collect()
+          .map(r => r.get(0) -> r.getSeq[Double](1)).toMap)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(reliable === DedupOps.dedupGroups(docs, 0.7).collect().toSet)
+    assert(cents === graft.operators.SimilarityOps.kmeansTrain(emb, 4, 3)._1
+      .collect().map(r => r.get(0) -> r.getSeq[Double](1)).toMap)
     // every doc collapsed to one component (the loop really ran)
-    assert(reliable.agg(countDistinct(col("component"))).head.getLong(0) === 1L)
+    assert(reliable.map(_.getLong(1)) === Set(0L))
     // reliable checkpoint data exists on disk (rdd-* dirs with files)
     def hasRddData(p: java.io.File): Boolean = {
       val kids = Option(p.listFiles()).getOrElse(Array.empty)
@@ -257,6 +264,45 @@ class DedupOpsSpec extends SparkSpec {
     assert(hasRddData(dir.toFile),
       s"no reliable checkpoint data under $dir")
     CacheRegistry.unpersistAll()
+  }
+
+  test("the closure fails loudly at its round cap instead of returning partial labels") {
+    val docs = chain20
+    val ex = intercept[IllegalStateException] {
+      DedupOps.dedupGroups(docs, 0.7, maxIters = 2)
+    }
+    assert(ex.getMessage.contains("closure") &&
+      ex.getMessage.contains("2 rounds run") && ex.getMessage.contains("maxIters = 2"))
+    assert(DedupOps.dedupGroups(docs, 0.7)
+      .agg(countDistinct(col("component"))).head.getLong(0) === 1L)
+    CacheRegistry.unpersistAll()
+  }
+
+  test("closure rounds carry per-round job tags and leave none on the thread") {
+    val tags = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties.getProperty("spark.job.tags"))
+          .foreach(_.split(",").foreach(tags.add))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      DedupOps.dedupGroups(chain20, 0.7).count()
+      org.apache.spark.sql.graftx.bridge.waitListenerBusEmpty(sc)
+      val rounds = tags.toArray.map(_.toString)
+        .collect { case s"graft.closure.round.$r" => r.toInt }.toSet
+      assert(rounds.size >= 3 && rounds === (1 to rounds.max).toSet,
+        s"closure round tags: $rounds")
+      assert(!sc.getJobTags().exists(_.startsWith("graft.")))
+      intercept[IllegalStateException] {
+        DedupOps.dedupGroups(chain20, 0.7, maxIters = 2)
+      }
+      assert(!sc.getJobTags().exists(_.startsWith("graft.")))
+    } finally {
+      sc.removeSparkListener(listener)
+      CacheRegistry.unpersistAll()
+    }
   }
 
   test("pipeline_curate output is a filtered subset with valid splits") {

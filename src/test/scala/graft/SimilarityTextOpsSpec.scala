@@ -879,7 +879,7 @@ class SimilarityTextOpsSpec extends SparkSpec {
   test("kmeansTrain: n-round loop equals the unrolled form; change counts published") {
     import org.apache.spark.sql.types.DecimalType
     // reference: the pre-r10 statically-composed 2-round form, inlined
-    // here WITHOUT checkpoints — the loop + plainLocalCheckpoint
+    // here WITHOUT checkpoints — the loop + per-round pins
     // rewrite must be value-identical (VERDICT r9 #7's done-criterion)
     val e = embeddings.select(col("vec_id"), col("embedding"))
     def update(asg: org.apache.spark.sql.DataFrame) = {
@@ -1665,6 +1665,26 @@ class SimilarityTextOpsSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       SimilarityOps.kCenterSample(embeddings, 65)
+    }
+  }
+
+  test("kCenterSample and mmrRerank keep only their final selection pinned") {
+    // each round's pins go once the next round has pinned its state:
+    // the result (and at most one helper pin) outlives the call, and
+    // the harness sweep returns the session to its baseline
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    CacheRegistry.unpersistAll(blocking = true)
+    embeddings.count()
+    val baseline = persisted
+    for ((name, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "kCenterSample" -> (() => SimilarityOps.kCenterSample(embeddings, 8)),
+        "mmrRerank" -> (() => SimilarityOps.mmrRerank(embeddings, k = 5)))) {
+      val out = run()
+      val added = persisted -- baseline
+      assert(added.size <= 2, s"$name left ${added.size} persistent RDDs")
+      assert(out.count() > 0, s"$name result must stay readable")
+      CacheRegistry.unpersistAll(blocking = true)
+      assert(persisted === baseline, s"$name: the sweep must return to baseline")
     }
   }
 
