@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftx.bridge
 import org.apache.spark.storage.StorageLevel
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Tracks the caches operators pin — persisted frames and
@@ -20,7 +20,8 @@ import scala.util.control.NonFatal
   * harness (Verify, Bench, tests) releases with [[unpersistAll]] after
   * the consuming action; operator results live there. No scope ever
   * releases a pin it did not register, so a result held elsewhere in
-  * the session stays readable.
+  * the session stays readable. A checkpoint registered a second time
+  * moves to the scope open then: each pinned RDD has one release.
   *
   * Every eager checkpoint in the library goes through [[pin]], and
   * every iterative kernel runs its rounds through [[rounds]], so how a
@@ -28,33 +29,55 @@ import scala.util.control.NonFatal
   * executor loss are decided here alone.
   */
 object CacheRegistry {
-  /** The release actions of one scope's pins. Guarded by the registry
-    * lock. A closed scope hands later registrations to the root list.
+  /** The release actions of one scope's pins, in registration order.
+    * A checkpoint's action is keyed by its RDD id, any other by a
+    * fresh key. Guarded by the registry lock. A closed scope hands
+    * later registrations to the root list.
     */
   private final class Scope {
-    val pins = ArrayBuffer.empty[Boolean => Unit]
+    val pins = mutable.LinkedHashMap.empty[Any, Boolean => Unit]
     var closed = false
   }
   private val root = new Scope
   private val open = ThreadLocal.withInitial[Scope](() => root)
+  /** The scope holding each registered checkpoint RDD's release. */
+  private val owner = mutable.HashMap.empty[Int, Scope]
 
-  private def register(release: Boolean => Unit): Unit = synchronized {
-    val s = open.get
-    (if (s.closed) root else s).pins += release
+  /** Add `release` under `key` to the open scope. A checkpoint RDD
+    * that some scope already holds moves to the open one, so its
+    * blocks are released once, when the scope that registered it
+    * last closes.
+    */
+  private def register(key: Any, release: Boolean => Unit): Unit = synchronized {
+    val s = if (open.get.closed) root else open.get
+    key match {
+      case id: Int =>
+        owner.put(id, s).foreach(_.pins.remove(id))
+      case _ =>
+    }
+    s.pins.put(key, release)
   }
 
   /** Close `s` (unless it is the root) and take its pins. */
-  private def close(s: Scope): List[Boolean => Unit] = synchronized {
+  private def close(s: Scope): List[(Any, Boolean => Unit)] = synchronized {
     if (s ne root) s.closed = true
     val p = s.pins.toList
     s.pins.clear()
+    p.foreach { case (id: Int, _) => owner.remove(id); case _ => }
     p
   }
 
   /** Close `s` and release its pins. */
   private def drain(s: Scope, blocking: Boolean): Unit =
-    close(s).foreach(release =>
-      try release(blocking) catch { case NonFatal(_) => () })
+    close(s).foreach { case (_, release) =>
+      try release(blocking) catch { case NonFatal(_) => () }
+    }
+
+  /** Whether this thread's open scope holds checkpoint RDD `rddId`'s
+    * release.
+    */
+  private[graft] def openScopeHolds(rddId: Int): Boolean =
+    synchronized(open.get.pins.contains(rddId))
 
   /** Run `body` with `s` as this thread's open scope. */
   private def within[T](s: Scope)(body: => T): T = {
@@ -66,7 +89,7 @@ object CacheRegistry {
   /** Persist at MEMORY_AND_DISK and remember the handle. */
   def persist(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    register(p.unpersist(_))
+    register(new AnyRef, p.unpersist(_))
     p
   }
 
@@ -97,10 +120,10 @@ object CacheRegistry {
     * into exactly the queries that need execution memory (VERDICT r4
     * #2). Registering gives a deterministic release point. [[pin]]
     * registers its own result; a caller registers a pin again only to
-    * release it with an inner scope.
+    * move it to the open scope, which then releases it alone.
     */
   private[graft] def registerCheckpoint(df: DataFrame): DataFrame = {
-    bridge.checkpointRdd(df).foreach(r => register(r.unpersist(_)))
+    bridge.checkpointRdd(df).foreach(r => register(r.id, r.unpersist(_)))
     df
   }
 
@@ -110,10 +133,13 @@ object CacheRegistry {
     * without this, five clustering queries per bench pass stack dead
     * blocks in the BlockManager and shrink unified execution memory for
     * every query after them (VERDICT r4 #2) — and a production session
-    * running the pipeline repeatedly leaks the same way.
+    * running the pipeline repeatedly leaks the same way. The scope
+    * that registered the pin drops its entry, so it does not release
+    * the blocks a second time.
     */
   def releaseCheckpoint(df: DataFrame): Unit =
     bridge.checkpointRdd(df).foreach { r =>
+      synchronized(owner.remove(r.id).foreach(_.pins.remove(r.id)))
       try r.unpersist(false) catch { case NonFatal(_) => () }
     }
 
@@ -199,7 +225,7 @@ object CacheRegistry {
         held = running
       }
       ok = true
-      close(held).foreach(register)
+      close(held).foreach { case (key, release) => register(key, release) }
       Rounds(state, r, done)
     } finally if (!ok) {
       drain(running, blocking = false)

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -17,6 +19,12 @@ import scala.util.control.NonFatal
   *    tags, description), so multi-job operators (the closure loop,
   *    streaming gates, iterative trainers) are attributable job by job;
   *    an iterative kernel's jobs carry `graft.<kernel>.round.<r>`.
+  *    The pass line carries the query's driver planning phases
+  *    (analysis, optimization, planning from `QueryExecution.tracker`;
+  *    the frame is analyzed when it is built, and its noop write
+  *    optimizes and plans it), then each other SQL execution of the
+  *    pass (a mart registration's count, an operator's collect) prints
+  *    its own.
   */
 object Dev {
   private val Usage =
@@ -108,14 +116,39 @@ object Dev {
           done.add((j.jobId, (System.nanoTime() - st._1) / 1e9, st._2, st._3))
       }
     })
+    // driver planning phases (ms) of each SQL execution, from the
+    // QueryExecution's own tracker
+    val phaseNames = Seq(QueryPlanningTracker.ANALYSIS,
+      QueryPlanningTracker.OPTIMIZATION, QueryPlanningTracker.PLANNING)
+    def phases(qe: QueryExecution): Seq[Long] = {
+      val ph = qe.tracker.phases
+      phaseNames.map(ph.get(_).map(_.durationMs).getOrElse(0L))
+    }
+    def show(ms: Seq[Long]) =
+      phaseNames.zip(ms).map { case (p, t) => s"$p=${t}ms" }.mkString(" ")
+    val executions = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(String, Seq[Long])]())
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add((funcName, phases(qe)))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     try (1 to passes).foreach { p =>
       done.clear()
+      executions.clear()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val df = fn(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.graftx.bridge.waitListenerBusEmpty(spark.sparkContext)
       Harness.release(spark)
-      println(f"[jobs] $name pass=$p wall=$wall%.2fs jobs=${done.size}")
+      val sql = executions.asScala.toList
+      // the frame is analyzed when it is built; its write, the last
+      // execution to end, optimizes and plans it
+      val own = phases(df.queryExecution).head +:
+        sql.lastOption.map(_._2.tail).getOrElse(Seq(0L, 0L))
+      println(f"[jobs] $name pass=$p wall=$wall%.2fs jobs=${done.size} ${show(own)}")
+      sql.dropRight(1).foreach { case (f, ms) => println(s"[jobs]   sql $f ${show(ms)}") }
       done.asScala.toSeq.sortBy(_._1).foreach { case (id, dur, desc, tasks) =>
         println(f"[jobs]   job=$id%-4d ${dur}%8.3fs tasks=$tasks%-5d $desc")
       }

@@ -75,7 +75,11 @@ object SparkEntry {
     * between QUERIES, so a timed pass never silently times mart
     * recomputation. At 100 TB the mart is still serving-sized
     * (keys × days), so register cost is the pipeline's, not the
-    * dashboards'.
+    * dashboards'. `register` picks the layout: at the gate's scale
+    * factors the mart is estimated under one AQE partition and is
+    * cached as one partition, so each serving entry runs one job with
+    * no exchange. `isCached` reads either layout's cache, so the
+    * re-register check holds for both.
     */
   private def servedDailyMart(s: SparkSession, d: String): String = {
     val name = "graft_served_daily_" + java.lang.Integer.toHexString(d.hashCode)

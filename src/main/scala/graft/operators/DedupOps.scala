@@ -1102,16 +1102,18 @@ object DedupOps {
     * ids, the prior labels, and batch-touching pairs, collapse edge
     * endpoints to prior-component nodes, propagate min labels over the
     * collapsed graph, and fan the new labels back out to members.
-    * A checkpointed `pairs` (the callers pin theirs) is released once
-    * the collapsed edge list is pinned, before round 1.
+    * A checkpointed `pairs` (the callers pin theirs) moves to the
+    * closure's edge scope, so it is released once the collapsed edge
+    * list is pinned, before round 1, and not again by the caller.
     */
   private[operators] def foldClosure(unionIds: DataFrame,
       priorLabels: DataFrame, pairs: DataFrame,
       maxIters: Int = 50): DataFrame = {
     val rep = priorLabels.select(col("doc_id"), col("component").as("rep"))
     // collapse endpoints to prior-component nodes and drop
-    // intra-component pairs (already merged); registering `pairs` in
-    // the closure's pin scope releases it as soon as the edges are pinned
+    // intra-component pairs (already merged); registering `pairs` again
+    // moves it to the closure's pin scope, which releases it as soon as
+    // the edges are pinned
     val moved = closure(
       graft.CacheRegistry.registerCheckpoint(pairs)
         .join(rep.select(col("doc_id").as("id1"), col("rep").as("r1")),

@@ -2,6 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's SERVING layer re-expressed at library level: its
@@ -20,6 +21,17 @@ import org.apache.spark.storage.StorageLevel
   * the mart — the TTL analog, but explicit: serving reflects a mart
   * VERSION, not a wall clock.
   *
+  * Layout: a mart no larger than one AQE partition is cached as ONE
+  * partition (see [[register]]). Its cache scan then reports
+  * `SinglePartition`, which satisfies every distribution the four
+  * query shapes require (`keys`' distinct, `wideSeries`' pivot
+  * aggregation, `kpiRow`'s global aggregate, every `orderBy`), so
+  * planning adds no Exchange and each dashboard query is one Spark
+  * job with no shuffle: a widget pays one job's scheduling, not the
+  * 3–4 jobs of a shuffle stage plus its AQE re-planning. A larger
+  * mart keeps the partitioning it was computed with and is scanned
+  * in parallel.
+  *
   * Scale: marts are serving-sized (per reference: regions × days),
   * so the cache is small even when the inputs were 100 TB; queries
   * against it are partition-pruned in-memory scans. The engine side
@@ -31,10 +43,30 @@ object MartServing {
   /** Materialize `mart` for serving under `name`. Returns the cached
     * frame. Re-registering a name drops the previous version first
     * (refresh semantics).
+    *
+    * The layout is decided before the persist, from the optimizer's
+    * size estimate of `mart` (`optimizedPlan.stats.sizeInBytes`): at
+    * most `spark.sql.adaptive.advisoryPartitionSizeInBytes` (AQE's
+    * target size for one partition, 64 MB by default) caches
+    * `mart.coalesce(1)`, anything larger caches `mart` as it is. Either
+    * way it is one persist and one count. The estimate errs large:
+    * without CBO an aggregate is estimated from its input (a daily mart
+    * of 32 regions × 365 days is estimated at 21.9 MB and caches
+    * 1.44 MB), and a
+    * source of unknown size, such as a JDBC table, reports
+    * `spark.sql.defaultSizeInBytes` and keeps the parallel layout.
+    * Caveat: a mart read straight from parquet is estimated at its
+    * compressed file size (times
+    * `spark.sql.sources.fileCompressionFactor`), which can be several
+    * times smaller than its in-memory cache, so such a mart can land in
+    * one partition above the threshold.
     */
   def register(spark: SparkSession, mart: DataFrame, name: String): DataFrame = {
     unregister(spark, name)
-    val cached = mart.persist(StorageLevel.MEMORY_AND_DISK)
+    val onePartition = mart.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val cached = (if (onePartition) mart.coalesce(1) else mart)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     cached.createOrReplaceTempView(name)
     // materialize eagerly: serving latency should be paid at register
     // time, not by the first dashboard query

@@ -109,6 +109,35 @@ class CacheRegistrySpec extends SparkSpec {
     assert(!pinned(p))
   }
 
+  test("a pin registered again moves to the inner scope, and is released once") {
+    // foldClosure's shape: the caller pins its pairs, and the closure
+    // registers them again so its edge scope releases them early
+    val rdd = CacheRegistry.scoped {
+      val p = CacheRegistry.pin(spark.range(8).toDF("a"))
+      val rdd = org.apache.spark.sql.graftx.bridge.checkpointRdd(p).get
+      assert(CacheRegistry.openScopeHolds(rdd.id))
+      CacheRegistry.scoped {
+        CacheRegistry.registerCheckpoint(p)
+        assert(CacheRegistry.openScopeHolds(rdd.id))
+      }
+      assert(!CacheRegistry.openScopeHolds(rdd.id),
+        "the outer scope must hold no entry once the pin has moved")
+      assert(!pinned(p), "the inner scope releases the moved pin")
+      // mark the RDD persistent again: a second release, by the outer
+      // scope closing, would unpersist it
+      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      // releasing a pin early drops its entry as well
+      val q = CacheRegistry.pin(spark.range(4).toDF("b"))
+      val qRdd = org.apache.spark.sql.graftx.bridge.checkpointRdd(q).get.id
+      CacheRegistry.releaseCheckpoint(q)
+      assert(!pinned(q) && !CacheRegistry.openScopeHolds(qRdd))
+      rdd
+    }
+    assert(persistentRddIds.contains(rdd.id),
+      "the outer scope released the moved pin a second time")
+    rdd.unpersist(true)
+  }
+
   test("rounds keeps round r-1 readable in round r and hands over only the last round") {
     CacheRegistry.unpersistAll(blocking = true)
     val states = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]

@@ -1,12 +1,67 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.bridge
 import graft.serving.MartServing
 import graft.operators.AgriOps
 
-class MartServingSpec extends SparkSpec {
+class MartServingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val mart = AgriOps.gridHourly(spark)
+
+  /** A serving-sized mart: 4 keys × 50 days over 4 input partitions. */
+  private def smallMart: DataFrame = spark.range(0, 200, 1, 4).select(
+    concat(lit("k"), (col("id") % 4).cast("string")).as("key"),
+    timestamp_seconds(lit(1704067200L) + (col("id") / 4).cast("long") * 86400L).as("ts"),
+    (col("id") * 1.5).as("v"))
+
+  /** The four dashboard shapes over the mart served as `name`. */
+  private def shapes(name: String): Seq[(String, DataFrame)] = Seq(
+    "keys" -> MartServing.keys(spark, name, "key"),
+    "range" -> MartServing.rangeLoad(spark, name, "key", Seq("k0", "k2"), "ts",
+      "2024-01-05 00:00:00", "2024-01-20 00:00:00"),
+    "wide" -> MartServing.wideSeries(spark, name, "key",
+      Seq("k0", "k1", "k2", "k3"), "ts", "v"),
+    "kpi" -> MartServing.kpiRow(spark, name, "key", "ts"))
+
+  /** Collect `df` and count the Spark jobs the collect started. */
+  private def collectCountingJobs(df: DataFrame): (Seq[Row], Int) = {
+    val sc = spark.sparkContext
+    bridge.waitListenerBusEmpty(sc) // no earlier job reaches the listener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rows = df.collect().toSeq
+      bridge.waitListenerBusEmpty(sc)
+      (rows, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Shuffle stages and exchanges of `df`'s final (AQE) plan, not
+    * counting the cached mart's own lineage.
+    */
+  private def exchanges(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) {
+      case s: ShuffleQueryStageExec => s.nodeName
+      case e: Exchange => e.nodeName
+    }
+
+  private def cacheLayout(name: String): Partitioning =
+    collect(spark.table(name).queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec => s.outputPartitioning
+    }.head
+
+  private def persistentRddIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("registered mart serves dashboard queries from the in-memory cache") {
     MartServing.register(spark, mart, "era5_hourly_srv")
@@ -78,5 +133,64 @@ class MartServingSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq === Seq("r0"))
     MartServing.unregister(spark, "srv_v")
     assert(!spark.catalog.tableExists("srv_v"))
+  }
+
+  test("a small mart is cached as one partition: each shape plans no exchange and runs one job") {
+    MartServing.register(spark, smallMart, "srv_small")
+    assert(spark.catalog.isCached("srv_small"),
+      "SparkEntry.servedDailyMart re-registers a mart that reads as uncached")
+    assert(cacheLayout("srv_small") === SinglePartition)
+    shapes("srv_small").foreach { case (shape, df) =>
+      val (rows, jobs) = collectCountingJobs(df)
+      assert(rows.nonEmpty, s"$shape returned no rows")
+      assert(exchanges(df).isEmpty,
+        s"$shape planned an exchange over the one-partition cache:\n" +
+          df.queryExecution.executedPlan)
+      assert(jobs === 1, s"$shape ran $jobs Spark jobs")
+    }
+    val range = shapes("srv_small").toMap.apply("range")
+    val served = range.queryExecution.executedPlan.toString.split("InMemoryRelation").head
+    assert(served.contains("InMemoryTableScan") && served.contains("IN (k0,k2)"),
+      s"expected the IN-list pushed into the cache scan in:\n$served")
+    MartServing.unregister(spark, "srv_small")
+  }
+
+  test("a mart estimated above one AQE partition, or of unknown size, keeps its partitions") {
+    MartServing.register(spark, smallMart, "srv_layout")
+    val single = shapes("srv_layout").map { case (shape, df) => shape -> df.collect().toSeq }
+    val estimate = smallMart.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (estimate - 1).toString)
+    val parallel = try {
+      MartServing.register(spark, smallMart, "srv_layout")
+      assert(spark.catalog.isCached("srv_layout"))
+      assert(cacheLayout("srv_layout").numPartitions === 4)
+      val keys = MartServing.keys(spark, "srv_layout", "key")
+      keys.collect()
+      assert(exchanges(keys).nonEmpty, "the parallel layout must still plan its shuffle")
+      shapes("srv_layout").map { case (shape, df) => shape -> df.collect().toSeq }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(parallel === single, "both layouts must serve the same rows")
+    assert(single.forall(_._2.nonEmpty))
+    // an RDD-backed frame reports spark.sql.defaultSizeInBytes, as a
+    // JDBC source does, so it is not narrowed to one partition
+    val unknown = spark.createDataFrame(smallMart.rdd, smallMart.schema)
+    MartServing.register(spark, unknown, "srv_layout")
+    assert(cacheLayout("srv_layout") !== SinglePartition)
+    MartServing.unregister(spark, "srv_layout")
+  }
+
+  test("refresh then unregister leaves no cached version behind") {
+    val baseline = persistentRddIds
+    MartServing.register(spark, smallMart, "srv_leak")
+    MartServing.refresh(spark, smallMart.filter(col("key") =!= "k3"), "srv_leak")
+    assert(spark.catalog.isCached("srv_leak"))
+    assert((persistentRddIds -- baseline).size === 1,
+      "only the current version may stay cached after a refresh")
+    assert(MartServing.keys(spark, "srv_leak", "key")
+      .collect().map(_.getString(0)).toSeq === Seq("k0", "k1", "k2"))
+    MartServing.unregister(spark, "srv_leak")
+    assert(persistentRddIds -- baseline === Set.empty[Int])
   }
 }
